@@ -262,7 +262,19 @@ class QueryService:
         ms = self.store.metastore
         as_of = as_of or {}
         prune = prune or {}
+
+        # Registration is LAZY: only the views the statement actually
+        # references are read — with `rels` unknown (parse failed /
+        # embedding callers) every view registers, the old behavior
+        # (ADVICE r14: per-query latency grew with the number of
+        # views a statement never touched; an unreferenced user
+        # table or rollup still paid its file listing per query).
+        def wanted(name: str) -> bool:
+            return rels is None or name.lower() in rels
+
         for coll in ms.collections(project):
+            if not (wanted(coll) or wanted(f"{coll}__rollup")):
+                continue
             eq = prune.get(coll)
             if coll in as_of or eq:
                 # time travel: the view is the txn snapshot at the
@@ -308,16 +320,23 @@ class QueryService:
                     if files
                     else self.store.read(project, coll).limit(0)
                 )
-                if coll not in as_of and self.store.rollup_meta(project, coll) is not None:
+                if (
+                    coll not in as_of
+                    and wanted(f"{coll}__rollup")
+                    and self.store.rollup_meta(project, coll) is not None
+                ):
                     views[f"{coll}__rollup"] = self.store.read_rollup(project, coll)
                 continue
             try:
                 views[coll] = self.store.read(project, coll)
             except FileNotFoundError:
                 continue
-            if self.store.rollup_meta(project, coll) is not None:
+            if (
+                wanted(f"{coll}__rollup")
+                and self.store.rollup_meta(project, coll) is not None
+            ):
                 views[f"{coll}__rollup"] = self.store.read_rollup(project, coll)
-        if self.users is not None:
+        if self.users is not None and wanted("users"):
             try:
                 views["users"] = self.users.table(project)
             except FileNotFoundError:
@@ -325,18 +344,13 @@ class QueryService:
         # materialized views (matview.py): queryable as
         # materialized_<name> at CONSUMPTION grain (a 'cells' view
         # registers re-aggregated, so direct readers never see the
-        # incremental path's partial cells).  Registration is LAZY:
-        # only the views the statement actually references resolve
-        # their txn logs — with `rels` unknown (parse failed /
-        # embedding callers) every view registers, the old behavior
-        # (ADVICE r14: per-query latency grew with the number of
-        # views a statement never touched).
+        # incremental path's partial cells)
         from .matview import MaterializedViewService
 
         mv = MaterializedViewService(self.spark, self.store)
         for name in mv.list(project):
             alias = f"materialized_{name}"
-            if rels is not None and alias.lower() not in rels:
+            if not wanted(alias):
                 continue
             try:
                 views[alias] = mv.table(project, name)

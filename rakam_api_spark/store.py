@@ -39,7 +39,7 @@ import threading
 import uuid
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -1711,8 +1711,11 @@ class EventStore:
                     "rollup dims/measures differ from the published contract; "
                     "run a full rebuild (months=None) to change them"
                 )
+            # rows written, counted DURING the write (no re-read)
+            obs = Observation()
             (
-                rollup.write.partitionBy("_month")
+                rollup.observe(obs, F.count(F.lit(1)).alias("n"))
+                .write.partitionBy("_month")
                 .option("partitionOverwriteMode", "dynamic")
                 .mode("overwrite")
                 .parquet(out)
@@ -1746,7 +1749,7 @@ class EventStore:
                     for m in rolled
                 }
             self._write_rollup_meta(project, collection, meta)
-            return self.spark.read.parquet(out).count()
+            return int(obs.get["n"])
 
     def _write_rollup_meta(self, project: str, collection: str, meta: dict) -> None:
         out = self._base_path(project, collection) + ".rollup"

@@ -55,6 +55,7 @@ Semantics:
 from __future__ import annotations
 
 import json
+import math
 import os
 import shutil
 import zlib
@@ -75,6 +76,26 @@ ENVELOPE_DDL = (
 )
 
 COMMIT_NS_FILE = "RAKAM_COMMIT_NS"
+
+# seen-uuid state: fixed schemas, so reads never infer from footers
+_SEEN_DDL = "uuid STRING, epoch BIGINT, shard INT"
+_PRE_SHARD_SEEN_DDL = "uuid STRING, epoch BIGINT"
+
+
+def _epoch_partitions(spark: SparkSession, nbytes: int) -> int:
+    """Partitions for an epoch of ``nbytes`` payload bytes, split the
+    way Spark splits a file scan (``FilePartition.maxSplitBytes``):
+    ``min(maxPartitionBytes, max(openCostInBytes, bytes / cores))``.
+    An epoch under ``openCostInBytes`` (4 MB by default) is ONE
+    partition, so each collection write lands one file per month
+    instead of one per source/shuffle partition; an epoch over
+    ``openCostInBytes`` × cores keeps a partition per core."""
+    conf = spark._jsparkSession.sessionState().conf()
+    split = min(
+        conf.filesMaxPartitionBytes(),
+        max(conf.filesOpenCostInBytes(), nbytes // spark.sparkContext.defaultParallelism),
+    )
+    return max(1, math.ceil(nbytes / split))
 
 
 def parse_envelope(df: DataFrame, value_col: str = "value") -> DataFrame:
@@ -316,16 +337,25 @@ class StreamingIngest:
         # otherwise scan (re-fetch from the bus) the source twice per
         # micro-batch
         raw = parse_envelope(batch_df).where(F.col("collection").isNotNull()).persist()
-        parsed = self._dedup(raw, epoch_id) if self.dedup_uuids else raw
-        # one cached pass feeds the schema probe, every per-collection
-        # ingest, and the post-ingest seen-uuid append
-        parsed = parsed.persist()
+        parsed = raw
         try:
+            # the epoch's first action: ONE aggregate fills the envelope
+            # cache and sizes everything after it
+            stats = raw.agg(
+                F.count(F.lit(1)).alias("rows"),
+                F.count("api.uuid").alias("uuid_rows"),
+                F.coalesce(F.sum(F.octet_length("props_json")), F.lit(0)).alias("bytes"),
+            ).first()
+            if self.dedup_uuids:
+                parsed = self._dedup(raw, epoch_id)
+            # one cached pass feeds the schema probe, every per-collection
+            # ingest, and the post-ingest seen-uuid append
+            parsed = parsed.coalesce(_epoch_partitions(spark, stats["bytes"])).persist()
             # ONE distributed job resolves every collection's property
             # schema: variant-parse each object JVM-side and merge
             # per-collection with schema_of_variant_agg.  The driver
             # gets one (collection, ddl) row per collection — schema
-            # metadata only, never data rows.
+            # metadata only, never data rows.  An empty epoch skips it.
             schema_rows = (
                 _json_object_rows(parsed)
                 .groupBy("collection")
@@ -333,6 +363,8 @@ class StreamingIngest:
                     F.schema_of_variant_agg(F.try_parse_json("props_json")).alias("vddl")
                 )
                 .collect()
+                if stats["rows"]
+                else []
             )
             push = bool(self.registry.subs)
 
@@ -452,13 +484,14 @@ class StreamingIngest:
                 # a mid-epoch crash re-processes the batch instead of
                 # losing it (and dead-lettered *values* never block a
                 # corrected resend — the uuid marks the stored event)
-                new_uuids = (
-                    parsed.select(
-                        F.col("api.uuid").alias("uuid"),
-                        F.lit(epoch_id).cast("long").alias("epoch"),
-                    ).where(F.col("uuid").isNotNull())
-                )
-                self._append_seen(new_uuids)
+                if stats["uuid_rows"]:
+                    new_uuids = (
+                        parsed.select(
+                            F.col("api.uuid").alias("uuid"),
+                            F.lit(epoch_id).cast("long").alias("epoch"),
+                        ).where(F.col("uuid").isNotNull())
+                    )
+                    self._append_seen(spark, new_uuids, epoch_id)
                 if self.seen_compact_every and epoch_id % self.seen_compact_every == 0:
                     self._compact_seen(spark, epoch_id)
         finally:
@@ -561,22 +594,37 @@ class StreamingIngest:
         d = self._current_seen_dir()
         if d is None:
             return None
-        df = spark.read.parquet(d)
-        if "shard" not in df.columns:  # pre-shard state layout
-            df = df.withColumn("shard", self._shard_expr(F.col("uuid")))
-        return df.where(
+        return self._scan_seen(spark, d).where(
             (F.col("epoch") >= F.lit(epoch_id - self.dedup_window))
             & (F.col("epoch") != F.lit(epoch_id))
         ).select("shard", "uuid", "epoch")
 
-    def _append_seen(self, df: DataFrame) -> None:
+    @staticmethod
+    def _is_sharded(d: str) -> bool:
+        return any(n.startswith("shard=") for n in os.listdir(d))
+
+    def _scan_seen(self, spark: SparkSession, d: str) -> DataFrame:
+        """The seen set in ``d`` under its fixed schema.  A pre-shard
+        directory (no ``shard=`` partitions) gets the shard computed."""
+        if self._is_sharded(d):
+            return spark.read.schema(_SEEN_DDL).parquet(d)
+        return (
+            spark.read.schema(_PRE_SHARD_SEEN_DDL)
+            .parquet(d)
+            .withColumn("shard", self._shard_expr(F.col("uuid")))
+        )
+
+    def _append_seen(self, spark: SparkSession, df: DataFrame, epoch_id: int) -> None:
         """Append this epoch's uuids, hash-sharded on uuid: the state
         dir is hive-partitioned by ``shard`` so compaction rewrites
-        and the dedup anti-join work shard-parallel."""
-        if df.isEmpty():
-            return
+        and the dedup anti-join work shard-parallel.  A pre-shard
+        CURRENT dir is first migrated by a compaction — sharded files
+        appended beside its flat ones would make it unreadable."""
         sharded = df.withColumn("shard", self._shard_expr(F.col("uuid")))
         d = self._current_seen_dir()
+        if d is not None and not self._is_sharded(d):
+            self._compact_seen(spark, epoch_id)
+            d = self._current_seen_dir()
         if d is None:
             os.makedirs(self._seen_base, exist_ok=True)
             d = os.path.join(self._seen_base, "v0")
@@ -599,11 +647,9 @@ class StreamingIngest:
         cur_name = os.path.basename(d)
         nxt_name = f"v{int(cur_name[1:]) + 1}"
         nxt = os.path.join(self._seen_base, nxt_name)
-        df = spark.read.parquet(d)
-        if "shard" not in df.columns:  # migrate pre-shard layout
-            df = df.withColumn("shard", self._shard_expr(F.col("uuid")))
         (
-            df.where(F.col("epoch") >= F.lit(epoch_id - self.dedup_window))
+            self._scan_seen(spark, d)
+            .where(F.col("epoch") >= F.lit(epoch_id - self.dedup_window))
             .repartition(self.seen_shards, "shard")
             .write.partitionBy("shard")
             .mode("overwrite")

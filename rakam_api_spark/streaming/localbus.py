@@ -50,11 +50,17 @@ def _partition_file(bus_dir: str, topic: str, partition: int) -> str:
 
 class LocalBusProducer:
     """Append-only keyed producer mirroring the Kafka producer API
-    surface used by the gateway (``send``/``flush``)."""
+    surface used by the gateway (``send``/``flush``).
+
+    Durability follows the Kafka producer contract: ``send`` appends
+    the record to its partition log at once (readers see it without
+    a flush), and records are durable once ``flush()`` returns —
+    it fsyncs each partition file written since the last flush."""
 
     def __init__(self, bus_dir: str, num_partitions: int = DEFAULT_NUM_PARTITIONS):
         self.bus_dir = bus_dir
         self.num_partitions = num_partitions
+        self._unsynced: set[str] = set()
 
     def send(self, topic: str, key: str, value: str) -> int:
         """Returns the partition the record landed on.  Partitioning
@@ -67,12 +73,21 @@ class LocalBusProducer:
         line = json.dumps({"key": key, "value": value})
         with open(path, "a", encoding="utf-8") as f:
             f.write(line + "\n")
-            f.flush()
-            os.fsync(f.fileno())
+        self._unsynced.add(path)
         return part
 
-    def flush(self) -> None:  # API parity with kafka-python
-        pass
+    def flush(self) -> None:
+        """Make every record sent so far durable: one fsync per
+        partition file touched since the last flush."""
+        for path in sorted(self._unsynced):
+            # unmark BEFORE the fsync: a send racing this flush marks
+            # the file again, so the next flush covers its record
+            self._unsynced.discard(path)
+            fd = os.open(path, os.O_RDONLY)
+            try:
+                os.fsync(fd)
+            finally:
+                os.close(fd)
 
 
 @dataclass

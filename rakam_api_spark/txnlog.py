@@ -58,6 +58,7 @@ or torn checkpoint always degrades safely to full replay.
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -66,6 +67,7 @@ import uuid as _uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 _TXN_DIR = "_txn"
 _STAGING_DIR = "_staging"
@@ -439,6 +441,18 @@ def _bloom_partial_batches(batches, cols: list[str]):
     yield pd.DataFrame(rows, columns=["f", "c", "kind", "payload"])
 
 
+@functools.lru_cache(maxsize=256)
+def _ddl_type(type_string: str) -> T.DataType:
+    return T.DataType.fromDDL(type_string)
+
+
+def _log_struct(cols: list) -> T.StructType:
+    """The recorded [[name, simpleString], ...] table schema as a
+    read schema.  Types parse one at a time, so column names never
+    pass through the DDL parser (``$server_time`` needs no quoting)."""
+    return T.StructType([T.StructField(n, _ddl_type(t)) for n, t in cols])
+
+
 def _uri_to_local(uri: str) -> str:
     if "://" in uri or uri.startswith("file:"):
         from urllib.parse import unquote, urlparse
@@ -663,11 +677,18 @@ class TxnTable:
 
     def _resolve(
         self, upto: int, use_checkpoints: bool = True
-    ) -> tuple[dict[str, dict], dict[str, int], list | None, dict]:
+    ) -> tuple[dict[str, dict], dict[str, int], list | None, dict, set[str]]:
         """Replay to ``upto``: (live files, app high-water marks,
         table schema as [[name, sparkSimpleTypeString], ...] or None
         for logs written before schema tracking, active CHECK
-        constraints {name: sql_expr}).
+        constraints {name: sql_expr}, untracked files).
+
+        Untracked files are every path ever added by a commit that
+        recorded no schema (a writer that predates schema tracking,
+        or the sparkless ``append_files``): the recorded schema need
+        not cover their columns, so scans that touch them infer the
+        schema from footers (see :meth:`_scan`).  Removed paths stay
+        in the set — the change feed still scans pre-images.
 
         Resolution = nearest checkpoint ≤ version + tail replay, so
         snapshot cost is bounded by ``checkpoint_every`` commit-file
@@ -681,6 +702,7 @@ class TxnTable:
         apps: dict[str, int] = {}
         schema: list | None = None
         constraints: dict[str, str] = {}
+        untracked: set[str] = set()
         start = 1
         opens = 0
         ckpts = (
@@ -696,10 +718,14 @@ class TxnTable:
                 apps = dict(snap.get("apps", {}))
                 schema = snap.get("schema")
                 constraints = dict(snap.get("constraints", {}))
+                # a checkpoint written before untracked files were
+                # recorded cannot tell them apart: KeyError → replay
+                untracked = set(snap["untracked"])
                 start = ckpts[-1] + 1
                 opens += 1
             except (OSError, ValueError, KeyError):
                 live, apps, schema, constraints, start = {}, {}, None, {}, 1
+                untracked = set()
         for v in range(start, upto + 1):
             rec = self._read_commit(v)
             opens += 1
@@ -710,10 +736,14 @@ class TxnTable:
             # both sets: the remove validates the file is still live
             # (CommitConflict if a rewrite retired it mid-flight), the
             # add re-registers it with the refreshed entry
-            for r in rec.get("remove", ()):
+            removed = rec.get("remove", ())
+            for r in removed:
                 live.pop(r, None)
             for ent in rec.get("add", ()):
                 live[ent["path"]] = ent
+                # a re-added path (rebloom) keeps its tracked status
+                if rec.get("schema") is None and ent["path"] not in removed:
+                    untracked.add(ent["path"])
             if rec.get("schema") is not None:
                 schema = rec["schema"]
             for cn, ce in (rec.get("set_constraints") or {}).items():
@@ -726,7 +756,7 @@ class TxnTable:
                 if appv > apps.get(app, -1):
                     apps[app] = appv
         self.last_state_file_opens = opens
-        return live, apps, schema, constraints
+        return live, apps, schema, constraints, untracked
 
     def _check_version_range(self, version: int) -> int:
         """Validate a requested snapshot version up front with a
@@ -886,26 +916,24 @@ class TxnTable:
                 + "; ".join(bad)
             )
 
-    def _merged_schema(self, df: DataFrame) -> list:
-        """Validate ``df`` against the current table schema and return
-        the merged (evolved) schema to record with the commit.
+    @staticmethod
+    def _columns(df: DataFrame) -> list:
+        """``df``'s schema as the log records it: [[name, type], ...]."""
+        return [[f.name, f.dataType.simpleString()] for f in df.schema.fields]
+
+    def _merge_incoming(self, incoming: list) -> list:
+        """Validate an incoming [[name, type], ...] column list against
+        the CURRENT table schema and return the merged (evolved)
+        schema to record with the commit.
 
         Existing columns must keep their exact type; new columns
         append (additive evolution, the Delta/mergeSchema contract
         enforced at WRITE time).  Raises :class:`SchemaConflict` with
-        the offending columns named."""
-        return self._merge_incoming(
-            [[f.name, f.dataType.simpleString()] for f in df.schema.fields]
-        )
-
-    def _merge_incoming(self, incoming: list) -> list:
-        """Merge an incoming [[name, type], ...] column list against
-        the CURRENT table schema (see :meth:`_merged_schema`).  Split
-        out so ``commit`` can RE-merge against the fresh snapshot
-        after losing a version race — two concurrent column-evolving
-        appends must both keep their columns in the tracked schema
-        (ADVICE r10: pre-computing once let the loser's column be
-        dropped by last-writer-wins)."""
+        the offending columns named.  ``commit`` RE-merges against
+        the fresh snapshot after losing a version race — two
+        concurrent column-evolving appends must both keep their
+        columns in the tracked schema (ADVICE r10: pre-computing once
+        let the loser's column be dropped by last-writer-wins)."""
         current = self.table_schema()
         if current is None:
             return incoming
@@ -942,7 +970,7 @@ class TxnTable:
         them falls back to full replay."""
         if self.checkpoint_every <= 0 or version % self.checkpoint_every != 0:
             return
-        live, apps, schema, constraints = self._resolve(version)
+        live, apps, schema, constraints, untracked = self._resolve(version)
         payload = json.dumps(
             {
                 "version": version,
@@ -950,6 +978,7 @@ class TxnTable:
                 "apps": apps,
                 "schema": schema,
                 "constraints": constraints,
+                "untracked": sorted(untracked),
             }
         )
         # Checkpoints are an accelerator, never a correctness
@@ -1140,7 +1169,10 @@ class TxnTable:
         path for ``bloom_cols`` columns) — all WITHOUT touching the
         filesystem.  A file lacking stats/blooms for a queried column
         is conservatively kept."""
-        ents = self.state(version).values()
+        return self._prune(self.state(version).values(), partitions, ranges, equals)
+
+    @staticmethod
+    def _prune(ents, partitions, ranges, equals) -> list[str]:
         out = []
         for e in ents:
             if partitions:
@@ -1201,22 +1233,37 @@ class TxnTable:
         """Snapshot read.  ``ranges``/``equals`` skip files from
         manifest stats and blooms only — callers still apply the
         actual row filter (skipping is a superset guarantee, exactly
-        as in Iceberg/Delta).  ``files`` short-circuits log resolution
+        as in Iceberg/Delta).  ``files`` skips the manifest pruning
         with a list the caller already obtained from
-        :meth:`live_files` — callers that need both the file list and
-        the DataFrame resolve the log once, not twice."""
+        :meth:`live_files`.  The log resolves once per call: the
+        same snapshot gives the file list and the read schema."""
+        upto = (
+            self.version() if version is None else self._check_version_range(version)
+        )
+        snap = self._resolve(upto)
         if files is None:
-            files = self.live_files(version, partitions, ranges, equals)
+            files = self._prune(snap[0].values(), partitions, ranges, equals)
         if not files:
             raise ValueError(
                 f"txn table {self.path} has no live files for this "
                 "version/partition selection"
             )
-        return (
-            self.spark.read.option("basePath", self.path)
-            .option("mergeSchema", "true")
-            .parquet(*[self._abs(f) for f in files])
-        )
+        return self._scan(files, snap)
+
+    def _scan(self, rels: list[str], snap: tuple) -> DataFrame:
+        """Parquet scan of the relative paths ``rels`` under the table
+        schema of the resolved snapshot ``snap`` (a :meth:`_resolve`
+        result) — no footer-merging job per read.  Files written
+        before a later additive column read it as NULL.  A log with
+        no recorded schema, or a scan touching an untracked file,
+        falls back to ``mergeSchema`` footer inference."""
+        cols, untracked = snap[2], snap[4]
+        reader = self.spark.read.option("basePath", self.path)
+        if cols is None or not untracked.isdisjoint(rels):
+            reader = reader.option("mergeSchema", "true")
+        else:
+            reader = reader.schema(_log_struct(cols))
+        return reader.parquet(*[self._abs(r) for r in rels])
 
     def changes(
         self, from_version: int, to_version: int | None = None
@@ -1243,13 +1290,17 @@ class TxnTable:
         snapshot diff); the (file → version/type) attribution is a
         broadcast map-join keyed on ``input_file_name`` — commit
         metadata stays driver-side JSON, rows never round-trip."""
-        to_v = self.version() if to_version is None else int(to_version)
+        to_v = (
+            self.version()
+            if to_version is None
+            else self._check_version_range(int(to_version))
+        )
         if not 0 <= int(from_version) <= to_v:
             raise ValueError(
                 f"changes: need 0 <= from_version <= to_version "
                 f"(got {from_version}, {to_v})"
             )
-        tagged: list[tuple[str, int, str]] = []  # (abs, version, type)
+        tagged: list[tuple[str, int, str]] = []  # (rel, version, type)
         for rec in self.history(since=int(from_version) + 1):
             v = rec["version"]
             if v > to_v:
@@ -1266,12 +1317,9 @@ class TxnTable:
             for key, ctype in kinds:
                 for e in rec.get(key) or []:
                     rel = e["path"] if isinstance(e, dict) else e
-                    p = self._abs(rel)
-                    if os.path.exists(p):  # vacuumed pre-images skip
-                        tagged.append((p, v, ctype))
+                    if os.path.exists(self._abs(rel)):  # vacuumed pre-images skip
+                        tagged.append((rel, v, ctype))
         if not tagged:
-            from pyspark.sql import types as T
-
             try:
                 schema = self.read(version=to_v).schema
             except ValueError:  # empty snapshot: metadata-only feed
@@ -1284,13 +1332,9 @@ class TxnTable:
                 ]
             )
             return self.spark.createDataFrame([], schema)
-        data = (
-            self.spark.read.option("basePath", self.path)
-            .option("mergeSchema", "true")
-            .parquet(*sorted({p for p, _, _ in tagged}))
-        )
+        data = self._scan(sorted({p for p, _, _ in tagged}), self._resolve(to_v))
         fmap = self.spark.createDataFrame(
-            [(p, v, c) for p, v, c in tagged],
+            [(self._abs(p), v, c) for p, v, c in tagged],
             "_cdf_file string, _commit_version long, _change_type string",
         )
         # input_file_name() is a percent-encoded URI (space -> %20,
@@ -1366,7 +1410,7 @@ class TxnTable:
                 raise ValueError("app requires app_version")
             if self.app_versions().get(app, -1) >= app_version:
                 return None  # replay of an applied epoch: skip the write too
-        incoming = [[f.name, f.dataType.simpleString()] for f in df.schema.fields]
+        incoming = self._columns(df)
         self._merge_incoming(incoming)  # reject type conflicts BEFORE writing
         validated = self.constraints()  # the set these rows are checked against
         self._check_constraints(df)  # CHECK constraints gate the write too
@@ -1671,7 +1715,7 @@ class TxnTable:
             # orphan files commit() then never references (ADVICE r16)
             if self.app_versions().get(app, -1) >= app_version:
                 return None
-        incoming = [[f.name, f.dataType.simpleString()] for f in df.schema.fields]
+        incoming = self._columns(df)
         self._merge_incoming(incoming)
         # same layout guard as merge(): a partitioned table's pre- and
         # post-image files must share one layout or the change feed's
@@ -1785,7 +1829,12 @@ class TxnTable:
             writer.parquet(staging)
             add = self._publish_staging(tag)
             try:
-                return self.commit(add=add, remove=snapshot, op="compact")
+                return self.commit(
+                    add=add,
+                    remove=snapshot,
+                    op="compact",
+                    schema_incoming=self._columns(df),
+                )
             except CommitConflict:
                 # someone else rewrote part of our snapshot: the files
                 # we just placed become orphans (vacuum reclaims) and
@@ -1822,7 +1871,8 @@ class TxnTable:
         version}."""
         from pyspark.sql import functions as F
 
-        self._merged_schema(updates)  # same write-time type gate as append
+        incoming = self._columns(updates)
+        self._merge_incoming(incoming)  # same write-time type gate as append
         # fail closed on a layout mismatch: rewriting a PARTITIONED
         # table without partition_col would publish the rewritten rows
         # into the unpartitioned root while removing their old files —
@@ -1871,19 +1921,15 @@ class TxnTable:
             return i < len(keys) and keys[i] <= rng[1]
 
         for _ in range(max_retries):
-            snap_version = self.version()
+            snap = self._resolve(self.version())
             candidates = sorted(
                 e["path"]
-                for e in self.state(snap_version).values()
+                for e in snap[0].values()
                 if _overlaps((e.get("stats") or {}).get(key))
             )
             rows_updated = 0
             if candidates:
-                existing = (
-                    self.spark.read.option("basePath", self.path)
-                    .option("mergeSchema", "true")
-                    .parquet(*[self._abs(f) for f in candidates])
-                )
+                existing = self._scan(candidates, snap)
                 rows_updated = existing.join(
                     updates.select(key), key, "left_semi"
                 ).count()
@@ -1907,6 +1953,7 @@ class TxnTable:
                     add=add,
                     remove=candidates,
                     op="merge",
+                    schema_incoming=incoming,
                     expect_constraints=validated_constraints,
                 )
             except CommitConflict as e:
@@ -2036,12 +2083,7 @@ class TxnTable:
         present = [f for f in files if os.path.exists(self._abs(f))]
         if not present:
             return None, end
-        df = (
-            self.spark.read.option("basePath", self.path)
-            .option("mergeSchema", "true")
-            .parquet(*[self._abs(f) for f in present])
-        )
-        return df, end
+        return self._scan(present, self._resolve(end)), end
 
     # --- reclamation -----------------------------------------------------
 

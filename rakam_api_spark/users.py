@@ -166,36 +166,31 @@ class UserStorage:
         if new_fields:
             self.metastore.get_or_create_collection_fields(project, USERS_COLLECTION, new_fields)
 
-    def _table_raw(self, project: str) -> DataFrame | None:
+    def _table_raw(self, project: str, schema: T.StructType) -> DataFrame | None:
         """Bucketed table WITH the ``_bucket`` partition column, or
-        None if never written.  mergeSchema: untouched partitions
-        keep their (narrower) write-time schema across additive
-        evolution."""
+        None if never written.  Read under ``schema``, the registered
+        user schema (no footer-merging job): untouched partitions keep
+        their narrower write-time schema across additive evolution,
+        and columns they lack read as NULL."""
         path = self._path(project)
         if not os.path.exists(path):
             return None
         # finish/roll back any swap a crash interrupted, so every
         # bucket is visible before the scan lists partitions
         self.state.recover_swaps(path)
-        return self.spark.read.option("mergeSchema", "true").parquet(path)
-
-    def _project_schema(self, df: DataFrame, schema: T.StructType) -> DataFrame:
-        cols = []
-        have = {f.name for f in df.schema.fields}
-        for fld in schema.fields:
-            if fld.name in have:
-                cols.append(F.col(f"`{fld.name}`").cast(fld.dataType).alias(fld.name))
-            else:
-                cols.append(F.lit(None).cast(fld.dataType).alias(fld.name))
-        return df.select(*cols)
+        read_schema = T.StructType(
+            [T.StructField(f.name, f.dataType) for f in schema.fields]
+            + [T.StructField("_bucket", T.IntegerType())]
+        )
+        return self.spark.read.schema(read_schema).parquet(path)
 
     def table(self, project: str) -> DataFrame:
         """Current user table (U9 metadata = .schema)."""
         schema = self._schema(project)
-        raw = self._table_raw(project)
+        raw = self._table_raw(project, schema)
         if raw is None:
             return self.spark.createDataFrame([], schema)
-        return self._project_schema(raw, schema)
+        return raw.drop("_bucket")
 
     def _merge_partitions(self, project: str, result: DataFrame, touched: list[int]) -> None:
         """Write ONLY the touched hash buckets: result (which holds
@@ -344,13 +339,11 @@ class UserStorage:
                 self._bucket_expr(project, F.col("id")).cast("int").alias("k")
             ).distinct().collect()
         )
-        raw = self._table_raw(project)
+        raw = self._table_raw(project, schema)
         if raw is None:
             current = self.spark.createDataFrame([], schema)
         else:
-            current = self._project_schema(
-                raw.where(F.col("_bucket").isin(touched_buckets)), schema
-            )
+            current = raw.where(F.col("_bucket").isin(touched_buckets)).drop("_bucket")
         merged = current.alias("t").join(updates.alias("u"), on="id", how="full_outer")
 
         out_cols = [F.col("id")]
@@ -410,14 +403,14 @@ class UserStorage:
         """U8 point lookup, pruned to the id's hash bucket (the
         bucket expression on a literal constant-folds, so the scan
         touches one partition directory)."""
-        raw = self._table_raw(project)
+        raw = self._table_raw(project, self._schema(project))
         if raw is None:
             return None
         pruned = raw.where(
             F.col("_bucket") == self._bucket_expr(project, F.lit(user_id)).cast("int")
         )
         rows = (
-            self._project_schema(pruned, self._schema(project))
+            pruned.drop("_bucket")
             .where(F.col("id") == F.lit(user_id))
             .limit(1)
             .collect()

@@ -29,9 +29,6 @@ _SLOW = {
     "test_index_maintenance.py::test_stale_bm25_index_surfaces_and_heals",
     "test_index_maintenance.py::test_stale_ivf_index_surfaces_heals_and_compacts",
     "test_index_maintenance.py::test_stale_minhash_index_surfaces_and_heals",
-    "test_localbus_e2e.py::test_localbus_produce_ingest_commit_roundtrip",
-    "test_localbus_e2e.py::test_localbus_replay_same_offsets",
-    "test_localbus_e2e.py::test_localbus_stream_epoch_maintenance_bounds_small_files",
     "test_lock_contention.py::test_acquisition_race_stress_under_cpu_load",
     "test_lock_contention.py::test_crashed_debris_race_exactly_one_winner",
     "test_lock_contention.py::test_stale_break_race_exactly_one_winner",
@@ -87,12 +84,8 @@ _SLOW = {
     "test_store_txn.py::test_enable_txn_migrates_and_routes_lifecycle",
     "test_store_txn.py::test_erase_user_on_txn_collection",
     "test_store_txn.py::test_store_export_manifest_external_read",
-    "test_store_txn.py::test_streaming_ingest_into_txn_collection",
-    "test_streaming.py::test_seen_state_sharded_and_join_pruned",
-    "test_streaming.py::test_uuid_dedup_window_expiry_and_bounded_state",
     "test_txn_bloom.py::test_maintenance_plans_and_runs_rebloom",
     "test_txn_bloom.py::test_store_point_lookup_via_equals",
-    "test_txn_checkpoint.py::test_epoch_rate_spark_appends_stay_bounded",
     "test_txn_checkpoint.py::test_rank_zorder_survives_skew_where_uniform_collapses",
     "test_users.py::test_identity_propagation_caps_lineage_on_chain_graph",
     "test_users.py::test_transitive_identity_stitching",

@@ -116,7 +116,8 @@ def test_rollup_publish_and_incremental_refresh(spark, warehouse):
 
     # append more feb data, refresh ONLY feb
     collector.bulk("p", "ev", batch([("u3", feb + 1000, "click", 5.0)]))
-    store.publish_rollup("p", "ev", months=["2024-02"])
+    n = store.publish_rollup("p", "ev", months=["2024-02"])
+    assert n == 1  # rows written by this refresh: (feb-01, click) only
     feb_rows = {
         (r["_day"].isoformat(), r["event_type"]): r
         for r in store.read_rollup("p", "ev").collect()
