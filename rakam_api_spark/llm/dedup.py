@@ -26,6 +26,16 @@ key.  Exact-verify shingle explosion happens only for candidate
 docs.  Net: every shuffle is O(docs) or O(candidates), never
 O(corpus shingles), and the Python work is embarrassingly
 batch-parallel.
+
+Rule: a declared query never returns a memoized final output; a call
+recomputes from its inputs, sharing at most intermediates.  The
+MinHash-LSH queries (``dedup_minhash_lsh``, ``lsh_band_efficiency``,
+``dedup_precision_audit``) hold no cache, checkpoint or memo at all:
+each builder returns one lazy plan and runs no Spark job before the
+caller's action.  The exact-Jaccard family still keeps per-session
+memos of its shingle frame and pair graphs; ``dedup_ngram_jaccard``
+returning the memoized 0.6 pair set it shares with the cluster
+queries is the one remaining breach of the rule.
 """
 
 from __future__ import annotations
@@ -185,6 +195,32 @@ def _corpus_pairs_memo(spark: SparkSession, sf_dir: str, threshold: float):
 _HOT_SHINGLE_DF_CAP = 10_000
 
 
+def _exact_pairs(sh: DataFrame) -> DataFrame:
+    """(d1, d2, inter, jaccard) for every doc pair sharing a shingle
+    of the (doc_id, shingle) frame ``sh``: shingle self-join →
+    per-pair intersection counts → Jaccard from exact integer set
+    sizes (double division of identical ints is bit-identical across
+    engines).  Lazy; the caller bounds the self-join."""
+    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
+    a, b = sh.alias("a"), sh.alias("b")
+    inter = (
+        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
+        .groupBy(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
+        .agg(F.count(F.lit(1)).alias("inter"))
+    )
+    s1 = sizes.select(F.col("doc_id").alias("d1"), F.col("n").alias("n1"))
+    s2 = sizes.select(F.col("doc_id").alias("d2"), F.col("n").alias("n2"))
+    return (
+        inter.join(s1, "d1")
+        .join(s2, "d2")
+        .withColumn(
+            "jaccard",
+            F.col("inter").cast("double") / (F.col("n1") + F.col("n2") - F.col("inter")).cast("double"),
+        )
+        .select("d1", "d2", "inter", "jaccard")
+    )
+
+
 def ngram_jaccard_pairs(
     spark: SparkSession,
     sf_dir: str,
@@ -192,11 +228,8 @@ def ngram_jaccard_pairs(
     docs: DataFrame | None = None,
     df_cap: int | None = _HOT_SHINGLE_DF_CAP,
 ) -> DataFrame:
-    """All doc pairs with word-3-gram Jaccard ≥ threshold.
-
-    shingle self-join → per-pair intersection counts → Jaccard from
-    exact integer set sizes (double division of identical ints is
-    bit-identical across engines).
+    """All doc pairs with word-3-gram Jaccard ≥ threshold, from the
+    exact shingle self-join (:func:`_exact_pairs`).
 
     ``docs`` overrides the corpus (the audit passes its enforced
     sample); the default is the full documents table.  ``df_cap``
@@ -230,27 +263,7 @@ def ngram_jaccard_pairs(
                 "minhash_lsh_pairs (banded LSH + verify) for this corpus, "
                 "or raise df_cap explicitly"
             )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    s1 = sizes.select(F.col("doc_id").alias("d1"), F.col("n").alias("n1"))
-    s2 = sizes.select(F.col("doc_id").alias("d2"), F.col("n").alias("n2"))
-    out = (
-        inter.join(s1, "d1")
-        .join(s2, "d2")
-        .withColumn(
-            "jaccard",
-            F.col("inter").cast("double") / (F.col("n1") + F.col("n2") - F.col("inter")).cast("double"),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("d1", "d2", "inter", "jaccard")
-        .orderBy("d1", "d2")
-    )
+    out = _exact_pairs(sh).where(F.col("jaccard") >= threshold).orderBy("d1", "d2")
     if per is not None:
         # materialize the (bounded) verified pair set once; every
         # 0.6-threshold consumer reuses it instead of re-running the
@@ -331,42 +344,9 @@ def _minhash_signature(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return docs.select("doc_id", text_col).mapInPandas(kernel, schema)
 
 
-#: per-session memos of the full-corpus LSH kernels, shared by the
-#: declared ``dedup_minhash_lsh`` query and ``lsh_band_efficiency``
-#: (which audits the SAME index): the MinHash signature frame (one
-#: Arrow kernel pass over every document), the banded candidate pair
-#: frame (band, d1, d2), and the verified pair set.  Before r17 the
-#: band audit re-ran the entire signature → banding → candidate →
-#: exact-verify chain that the pair query had just executed
-#: (guide §2.4: compute a shared intermediate once).  Same safety
-#: argument as _SHINGLE_MEMO / _PAIRS_MEMO: immutable inputs,
-#: deterministic derivation (md5-based OPH, ordered collects),
-#: bounded materializations, weak session keys — rebuilt from parquet
-#: in every fresh process.
-_SIG_MEMO: "WeakKeyDictionary[SparkSession, dict]" = WeakKeyDictionary()
-_BAND_PAIRS_MEMO: "WeakKeyDictionary[SparkSession, dict]" = WeakKeyDictionary()
-_LSH_PAIRS_MEMO: "WeakKeyDictionary[SparkSession, dict]" = WeakKeyDictionary()
-
-
-def _corpus_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized cached full-corpus MinHash signature frame (one row
-    per doc — cheap to hold; the kernel is the expensive part)."""
-    try:
-        per = _SIG_MEMO.setdefault(spark, {})
-        hit = per.get(sf_dir)
-        if hit is not None:
-            return hit
-    except TypeError:  # unhashable/mock session
-        per = None
-    sig = _minhash_signature(_docs(spark, sf_dir)).cache()
-    sig.count()
-    if per is not None:
-        per[sf_dir] = sig
-    return sig
-
-
 def _band_keys(sig: DataFrame) -> DataFrame:
-    """(doc_id, band, band_key) — one row per doc per band."""
+    """(doc_id, n, band, band_key) — one row per doc per band; the
+    shingle-set size ``n`` rides along so candidate pairs carry it."""
     n_bands = N_HASHES // BAND_SIZE
     band_structs = [
         F.struct(
@@ -377,54 +357,70 @@ def _band_keys(sig: DataFrame) -> DataFrame:
         )
         for b in range(n_bands)
     ]
-    return sig.select("doc_id", F.explode(F.array(*band_structs)).alias("bk")).select(
-        "doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("band_key")
+    return sig.select("doc_id", "n", F.explode(F.array(*band_structs)).alias("bk")).select(
+        "doc_id", "n", F.col("bk.band").alias("band"), F.col("bk.key").alias("band_key")
     )
 
 
-def _bucket_pair_expr(max_bucket: int):
-    """All-pairs within normal buckets; star (min ↔ member) within
-    oversized ones — O(k) instead of O(k²) under degenerate skew."""
-    return F.when(
+def _lsh_buckets(docs: DataFrame) -> DataFrame:
+    """(band, ds) for every multi-doc band bucket: ``ds`` is the
+    bucket's (doc_id, n) members sorted by doc_id.  One shuffle of
+    one row per doc per band; the MinHash kernel feeds nothing else,
+    so it runs once per plan without a cache."""
+    return (
+        _band_keys(_minhash_signature(docs))
+        .groupBy("band", "band_key")
+        .agg(F.sort_array(F.collect_list(F.struct("doc_id", "n"))).alias("ds"))
+        .where(F.size("ds") > 1)
+    )
+
+
+def _band_pairs(buckets: DataFrame, max_bucket: int) -> DataFrame:
+    """(band, d1, n1, d2, n2) candidate pairs, d1 < d2, one row per
+    bucket hit (callers take the distinct rows they need).
+
+    All-pairs within normal buckets; STAR (bucket minimum ↔ member)
+    within buckets larger than ``max_bucket`` — O(k) instead of O(k²)
+    under degenerate skew.  Members of an oversized bucket agree on a
+    whole band of MinHashes, so they are near-identical and the star
+    pairs carry the same dedup decision transitively."""
+    pair = "struct({x}.doc_id AS d1, {x}.n AS n1, y.doc_id AS d2, y.n AS n2)"
+    expr = F.when(
         F.size("ds") <= max_bucket,
         F.expr(
             "flatten(transform(ds, (x, i) -> "
-            "transform(slice(ds, i + 2, size(ds)), y -> struct(x AS d1, y AS d2))))"
+            f"transform(slice(ds, i + 2, size(ds)), y -> {pair.format(x='x')})))"
         ),
     ).otherwise(
-        F.expr("transform(slice(ds, 2, size(ds)), y -> struct(ds[0] AS d1, y AS d2))")
+        F.expr(f"transform(slice(ds, 2, size(ds)), y -> {pair.format(x='ds[0]')})")
     )
+    return buckets.select("band", F.explode(expr).alias("p")).select("band", "p.*")
 
 
-def _corpus_band_pairs(spark: SparkSession, sf_dir: str, max_bucket: int) -> DataFrame:
-    """Memoized (band, d1, d2) candidate frame over the full corpus —
-    the banded LSH sweep BEFORE collapsing bands: the pair query
-    needs the distinct (d1, d2) projection, the band audit the per-
-    band counts; both read one materialization.  Bounded by the
-    bucket expansion (max_bucket² per bucket, star beyond)."""
-    try:
-        per = _BAND_PAIRS_MEMO.setdefault(spark, {})
-        key = (sf_dir, max_bucket)
-        hit = per.get(key)
-        if hit is not None:
-            return hit
-    except TypeError:
-        per, key = None, None
-    buckets = (
-        _band_keys(_corpus_sig(spark, sf_dir))
-        .groupBy("band", "band_key")
-        .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
-        .where(F.size("ds") > 1)
+def _verify(docs: DataFrame, candidates: DataFrame, threshold: float) -> DataFrame:
+    """(d1, d2, jaccard) for the (d1, n1, d2, n2) candidates whose
+    exact word-3-gram Jaccard is ≥ threshold.  Shingles are exploded
+    ONLY for candidate docs (semi-join before ``word_shingles``), so
+    the verify shuffles are O(candidates), never O(corpus shingles).
+    No broadcast hint on the id set: it is one row per colliding
+    document, corpus-fraction-sized at web-corpus dup rates — AQE
+    broadcasts it while small and shuffle-joins at scale."""
+    cand_ids = candidates.select(F.explode(F.array("d1", "d2")).alias("doc_id")).distinct()
+    sh = word_shingles(docs.join(cand_ids, "doc_id", "left_semi"))
+    inter = (
+        candidates.join(sh.withColumnRenamed("doc_id", "d1"), "d1")
+        .join(sh.withColumnRenamed("doc_id", "d2"), ["d2", "shingle"])
+        .groupBy("d1", "d2", "n1", "n2")
+        .agg(F.count(F.lit(1)).alias("inter"))
     )
-    out = (
-        buckets.select("band", F.explode(_bucket_pair_expr(max_bucket)).alias("p"))
-        .select("band", "p.d1", "p.d2")
-        .distinct()
+    return (
+        inter.withColumn(
+            "jaccard",
+            F.col("inter").cast("double") / (F.col("n1") + F.col("n2") - F.col("inter")).cast("double"),
+        )
+        .where(F.col("jaccard") >= threshold)
+        .select("d1", "d2", "jaccard")
     )
-    if per is not None:
-        out = out.localCheckpoint(eager=True)
-        per[key] = out
-    return out
 
 
 def minhash_lsh_pairs(
@@ -436,119 +432,23 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """Near-dup pairs via MinHash-LSH, verified with exact Jaccard.
 
-    Pipeline: shingle → (size+signature) in one partial-aggregated
-    shuffle → explode band keys → bucket groupBy with in-bucket pair
-    expansion (one shuffle of one row per doc per band, no
-    self-join) → distinct candidates → exact-Jaccard verify joining
-    candidate docs' shingles only.  Total cost is O(corpus) +
-    O(near-dups) — the 100 TB path.
+    One lazy plan: per-doc signature (Arrow kernel, no shingle rows on
+    the wire) → band keys → bucket groupBy with in-bucket pair
+    expansion (no self-join; star fallback past ``max_bucket``, see
+    :func:`_band_pairs`) → distinct candidates carrying both shingle-
+    set sizes → exact-Jaccard verify over candidate docs' shingles.
+    Every shuffle is O(docs) or O(candidates) — the 100 TB path.
 
-    Skew guard: a degenerate bucket (thousands of near-identical
-    docs sharing a band key) would make the all-pairs expansion
-    O(k²).  Buckets larger than ``max_bucket`` switch to a STAR
-    pattern — every member pairs with the bucket minimum only
-    (O(k)); members of an oversized bucket agree on a whole band of
-    MinHashes, so they are near-identical and the star pairs carry
-    the same dedup decision transitively.
-
-    Shuffle inventory (the 100 TB ledger): signatures are computed
-    per doc in an Arrow kernel (no shingle rows on the wire), band
-    buckets shuffle one row per doc per band, and the exact-Jaccard
-    verify explodes shingles ONLY for candidate docs — so every
-    shuffle is O(docs) or O(candidates), never O(corpus shingles).
+    ``docs`` overrides the corpus (the precision audit passes its
+    sample); the default is the full documents table — the same code
+    either way.  Nothing runs until the caller's action: no cache, no
+    checkpoint, no memo, so every call recomputes from its inputs and
+    a declared query never returns a memoized final output.
     """
     if docs is None:
-        # full-corpus path: memoized output (this function IS the
-        # declared dedup_minhash_lsh query AND lsh_band_efficiency's
-        # verified set), built from the memoized signature/band-pair
-        # kernels so the audit never re-runs them
-        try:
-            per = _LSH_PAIRS_MEMO.setdefault(spark, {})
-            key = (sf_dir, float(threshold), max_bucket)
-            hit = per.get(key)
-            if hit is not None:
-                return hit
-        except TypeError:  # unhashable/mock session
-            per, key = None, None
         docs = _docs(spark, sf_dir)
-        sig = _corpus_sig(spark, sf_dir)
-        # candidates feed three branches (two id sets + the
-        # intersection join) — cache the (small) pair list
-        candidates = (
-            _corpus_band_pairs(spark, sf_dir, max_bucket)
-            .select("d1", "d2")
-            .distinct()
-            .cache()
-        )
-        candidates.count()
-    else:
-        per, key = None, None
-        # sig feeds THREE plan branches (band keys + both size joins);
-        # Spark does not CSE across branches, so an uncached sig would
-        # re-run the signature kernel once per branch.  One row per
-        # doc — cheap to hold.
-        sig = _minhash_signature(docs).cache()
-        sig.count()
-        buckets = (
-            _band_keys(sig)
-            .groupBy("band", "band_key")
-            .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
-            .where(F.size("ds") > 1)
-        )
-        candidates = (
-            buckets.select(F.explode(_bucket_pair_expr(max_bucket)).alias("p"))
-            .select("p.d1", "p.d2")
-            .distinct()
-            .cache()
-        )
-        candidates.count()
-    # verify candidates with exact jaccard.  Prune FIRST: shingles
-    # are exploded ONLY for candidate docs (semi-join on the
-    # candidate id sets BEFORE word_shingles) — the round-2 plan
-    # shingled the whole corpus up front and pruned after; now
-    # non-candidate docs never produce a shingle row.  NO broadcast
-    # hint on the id sets: they are one row per COLLIDING document,
-    # a corpus-fraction-sized frame at web-corpus dup rates — AQE
-    # broadcasts while they are small and shuffle-joins at scale
-    # (round 11; the r10 identity-stitch / r8 cluster_safe_splits
-    # precedent).
-    ids1 = candidates.select(F.col("d1").alias("doc_id")).distinct()
-    ids2 = candidates.select(F.col("d2").alias("doc_id")).distinct()
-    cand_ids = ids1.unionByName(ids2).distinct()
-    sh = word_shingles(docs.join(cand_ids, "doc_id", "left_semi")).cache()
-    sh1 = sh.join(ids1, "doc_id", "left_semi").select(
-        F.col("doc_id").alias("d1"), "shingle"
-    )
-    sh2 = sh.join(ids2, "doc_id", "left_semi").select(
-        F.col("doc_id").alias("d2"), "shingle"
-    )
-    inter = (
-        candidates.join(sh1, "d1")
-        .join(sh2, ["d2", "shingle"])
-        .groupBy("d1", "d2")
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    s1 = sig.select(F.col("doc_id").alias("d1"), F.col("n").alias("n1"))
-    s2 = sig.select(F.col("doc_id").alias("d2"), F.col("n").alias("n2"))
-    out = (
-        inter.join(s1, "d1")
-        .join(s2, "d2")
-        .withColumn(
-            "jaccard",
-            F.col("inter").cast("double") / (F.col("n1") + F.col("n2") - F.col("inter")).cast("double"),
-        )
-        .where(F.col("jaccard") >= threshold)
-        .select("d1", "d2", "jaccard")
-        .orderBy("d1", "d2")
-    )
-    if per is not None:
-        # materialize the (bounded, near-dup-sized) verified pair set
-        # once per session — deterministic kernel, rebuilt from
-        # parquet in every fresh process (same discipline as
-        # _PAIRS_MEMO / _SAMPLE_GRAPH_MEMO)
-        out = out.localCheckpoint(eager=True)
-        per[key] = out
-    return out
+    candidates = _band_pairs(_lsh_buckets(docs), max_bucket).drop("band").distinct()
+    return _verify(docs, candidates, threshold).orderBy("d1", "d2")
 
 
 MINHASH_LSH_ORACLE = """
@@ -634,29 +534,19 @@ def lsh_band_efficiency(
     ``pq_reconstruction_error`` — every index here ships with its
     health report.
 
-    Reuses the production kernels — LITERALLY, since r17: the
-    signature frame, the (band, d1, d2) candidate frame and the
-    verified pair set are the per-session memoized kernels the
-    declared ``dedup_minhash_lsh`` query builds, so the audit adds
-    only the per-band rollups instead of re-running the whole
-    signature → banding → candidate → exact-verify chain
-    (guide §2.4).  The multi-doc bucket count per band is a partial-
-    aggregatable (band, key) count over the band-key frame — never a
-    second collect_list pass.  Counts are exact; precision is one
-    double division (NULL for a candidate-less band)."""
-    band_pairs = _corpus_band_pairs(spark, sf_dir, max_bucket)
-    verified = minhash_lsh_pairs(
-        spark, sf_dir, threshold=threshold, max_bucket=max_bucket
-    ).select("d1", "d2")
+    Builds its own single lazy plan from the same signature → band
+    pairs → verify helpers as :func:`minhash_lsh_pairs` (it never
+    receives that query's output).  The per-band bucket count reads
+    the same bucket frame as the pair expansion, so both share one
+    exchange and the MinHash kernel runs once.  Counts are exact;
+    precision is one double division (NULL for a candidate-less
+    band)."""
+    docs = _docs(spark, sf_dir)
+    buckets = _lsh_buckets(docs)
+    band_pairs = _band_pairs(buckets, max_bucket).distinct()
+    verified = _verify(docs, band_pairs.drop("band").distinct(), threshold)
     hits = band_pairs.join(verified, ["d1", "d2"], "left_semi")
-    n_buckets = (
-        _band_keys(_corpus_sig(spark, sf_dir))
-        .groupBy("band", "band_key")
-        .agg(F.count(F.lit(1)).alias("k"))
-        .where(F.col("k") > 1)
-        .groupBy("band")
-        .agg(F.count(F.lit(1)).alias("n_buckets"))
-    )
+    n_buckets = buckets.groupBy("band").agg(F.count(F.lit(1)).alias("n_buckets"))
     n_cand = band_pairs.groupBy("band").agg(
         F.count(F.lit(1)).alias("n_candidates")
     )
@@ -1149,9 +1039,8 @@ AUDIT_MAX_DOCS = 400
 
 #: per-session memo of UNTHRESHOLDED exact-Jaccard pair graphs over
 #: the deterministic hash-rank samples, keyed (sf_dir, max_docs).
-#: The three sampled audits (precision 400, transitivity 2000,
-#: threshold-curve 2000) each used to re-run the shingle self-join on
-#: their own sample even though only the FINAL threshold filter
+#: The transitivity audit and the threshold curve (2000 docs each)
+#: each used to re-run the shingle self-join on their own sample even though only the FINAL threshold filter
 #: differs — and exact Jaccard is a pairwise function, so the graph
 #: over a hash-rank-prefix sample is exactly the larger graph
 #: restricted to pairs with both endpoints in the prefix.  One build
@@ -1208,24 +1097,7 @@ def _sample_pair_graph(spark: SparkSession, sf_dir: str, max_docs: int) -> DataF
             f"_sample_pair_graph: hottest shingle appears in {hot['max_df']} "
             f"documents (> df_cap={_HOT_SHINGLE_DF_CAP}); use the LSH path"
         )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-        .agg(F.count(F.lit(1)).alias("inter"))
-    )
-    s1 = sizes.select(F.col("doc_id").alias("d1"), F.col("n").alias("n1"))
-    s2 = sizes.select(F.col("doc_id").alias("d2"), F.col("n").alias("n2"))
-    out = (
-        inter.join(s1, "d1")
-        .join(s2, "d2")
-        .withColumn(
-            "jaccard",
-            F.col("inter").cast("double") / (F.col("n1") + F.col("n2") - F.col("inter")).cast("double"),
-        )
-        .select("d1", "d2", "inter", "jaccard")
-    )
+    out = _exact_pairs(sh)
     if per is not None:
         out = out.localCheckpoint(eager=True)
         per[key] = out
@@ -1242,6 +1114,16 @@ def _sample_pair_graph(spark: SparkSession, sf_dir: str, max_docs: int) -> DataF
 #: larger one, derived driver-free by re-limiting the memoized frame
 #: (guide §2.4: compute a shared intermediate once).
 _AUDIT_IDS_MEMO: "WeakKeyDictionary[SparkSession, dict]" = WeakKeyDictionary()
+
+
+def _hash_rank_ids(docs: DataFrame, max_docs: int) -> DataFrame:
+    """(doc_id, _h) of the ``max_docs`` docs ranked first by
+    md5(doc_id) — lazy; see :func:`audit_sample`."""
+    return (
+        docs.select("doc_id", F.md5(F.col("doc_id").cast("string")).alias("_h"))
+        .orderBy("_h", "doc_id")
+        .limit(max_docs)
+    )
 
 
 def _audit_chosen(spark: SparkSession, sf_dir: str, max_docs: int) -> DataFrame:
@@ -1261,12 +1143,7 @@ def _audit_chosen(spark: SparkSession, sf_dir: str, max_docs: int) -> DataFrame:
             out = big.orderBy("_h", "doc_id").limit(max_docs)
             per[key] = out
             return out.select("doc_id")
-    chosen = (
-        _docs(spark, sf_dir)
-        .select("doc_id", F.md5(F.col("doc_id").cast("string")).alias("_h"))
-        .orderBy("_h", "doc_id")
-        .limit(max_docs)
-    )
+    chosen = _hash_rank_ids(_docs(spark, sf_dir), max_docs)
     if per is not None:
         chosen = chosen.localCheckpoint(eager=True)
         per[(sf_dir, max_docs)] = chosen
@@ -1313,18 +1190,20 @@ def dedup_precision_audit(
     (VERDICT r7 Next #5: the bound is a parameter, not prose).  Both
     sides run on the same sample, so recall is measured like-for-like;
     the production LSH sweep itself stays the full-corpus O(corpus)
-    plan.
+    plan.  A sample of at most ``_HOT_SHINGLE_DF_CAP`` docs bounds
+    every shingle's document frequency, so the exact side needs no
+    hot-shingle pass and the whole audit is one lazy plan.
     """
-    if max_docs <= 0:
-        raise ValueError("dedup_precision_audit requires max_docs >= 1")
-    sample = audit_sample(spark, sf_dir, max_docs)
-    # truth comes from the shared memoized sample pair graph (same
-    # values as the per-query self-join it replaces: exact Jaccard is
-    # pairwise, see _sample_pair_graph); the LSH side still runs the
-    # real banding chain on the sample — that is the system under
-    # audit.
+    if not 1 <= max_docs <= _HOT_SHINGLE_DF_CAP:
+        raise ValueError(
+            f"dedup_precision_audit requires 1 <= max_docs <= {_HOT_SHINGLE_DF_CAP}"
+        )
+    docs = _docs(spark, sf_dir)
+    sample = docs.join(F.broadcast(_hash_rank_ids(docs, max_docs).select("doc_id")), "doc_id")
+    # the LSH side runs the real banding chain on the sample — that is
+    # the system under audit
     truth = (
-        _sample_pair_graph(spark, sf_dir, max_docs)
+        _exact_pairs(word_shingles(sample))
         .where(F.col("jaccard") >= threshold)
         .select("d1", "d2")
     )

@@ -1378,7 +1378,13 @@ def _hamming_band_pairs(
     ``max_hamming <= bands - 1``.  The default 8×8-bit bands
     guarantee recall at hamming ≤ 7, covering every caller's default
     threshold (image dedup's max_hamming=6 flips could spread
-    2/2/1/1 over the previous 4×16-bit layout and miss)."""
+    2/2/1/1 over the previous 4×16-bit layout and miss).
+
+    PRECONDITION: ``hashed`` holds one hash row per ``asset_id``.  The
+    output's ``distinct()`` runs after the hamming gate and relies on
+    (asset_a, asset_b) determining (ha, hb); with several hashes per
+    asset, pairs from different hash combinations at equal hamming
+    would collapse into one row."""
     if max_hamming > bands - 1:
         raise ValueError(
             f"max_hamming={max_hamming} exceeds the guaranteed-recall bound "

@@ -1,4 +1,5 @@
 import sys
+import uuid
 
 import pytest
 
@@ -22,8 +23,6 @@ _SLOW = {
     "test_curation.py::test_connected_components_transitivity",
     "test_dedup_index.py::TestMinHashIndex::test_append_then_probe",
     "test_dedup_index.py::TestMinHashIndex::test_exact_verify_path",
-    "test_dedup_skew.py::test_precision_audit_sample_cap_enforced",
-    "test_dedup_skew.py::test_star_fallback_preserves_dedup_decision",
     "test_index_maintenance.py::test_index_over_txn_base_ignores_retired_files",
     "test_index_maintenance.py::test_index_refresh_respects_writer_lock",
     "test_index_maintenance.py::test_stale_bm25_index_surfaces_and_heals",
@@ -93,6 +92,17 @@ _SLOW = {
 
 
 def pytest_collection_modifyitems(config, items):
+    ids = {item.nodeid.split("[", 1)[0].removeprefix("tests/") for item in items}
+    # a file named with ``::`` on the command line is collected only in
+    # part, so its other entries cannot be checked
+    partial = {a.split("::", 1)[0].rsplit("/", 1)[-1] for a in config.args if "::" in a}
+    checked = {i.split("::", 1)[0] for i in ids} - partial
+    stale = sorted(e for e in _SLOW if e not in ids and e.split("::", 1)[0] in checked)
+    if stale:
+        raise pytest.UsageError(
+            "tests/conftest.py _SLOW names tests that were not collected "
+            f"(renamed, removed or mistyped): {stale}"
+        )
     for item in items:
         nodeid = item.nodeid.split("[", 1)[0]
         if nodeid.removeprefix("tests/") in _SLOW:
@@ -103,6 +113,26 @@ def pytest_collection_modifyitems(config, items):
 def spark():
     s = get_spark("rakam-api-spark-tests", cpus=8)
     yield s
+
+
+@pytest.fixture()
+def jobs_during(spark):
+    """probe(fn) -> (fn(), ids of the Spark jobs fn submitted from this
+    thread)."""
+    sc = spark.sparkContext
+
+    def probe(fn):
+        group = f"probe-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "job probe")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        # job-start events reach the status store through the listener bus
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+    return probe
 
 
 @pytest.fixture()

@@ -97,6 +97,9 @@ def test_precision_audit_sample_cap_enforced(spark, skew_dir):
     assert row["n_extra"] == 0
     with pytest.raises(ValueError):
         dedup_precision_audit(spark, skew_dir, max_docs=0)
+    # above the hot-shingle cap the sample no longer bounds the exact side
+    with pytest.raises(ValueError):
+        dedup_precision_audit(spark, skew_dir, max_docs=10_001)
 
 
 def test_threshold_curve_sample_cap_enforced(spark, skew_dir):

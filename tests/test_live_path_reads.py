@@ -5,7 +5,6 @@ epoch writes one file per (collection, month)."""
 
 import json
 import os
-import uuid
 
 from pyspark.sql import functions as F
 
@@ -17,20 +16,6 @@ from rakam_api_spark.streaming.job import to_kafka_envelopes
 from rakam_api_spark.streaming.localbus import LocalBusProducer
 from rakam_api_spark.txnlog import TxnTable
 from rakam_api_spark.users import UserStorage
-
-
-def _jobs_during(spark, fn):
-    """(fn(), ids of the Spark jobs fn submitted from this thread)."""
-    sc = spark.sparkContext
-    group = f"probe-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "job probe")
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    # job-start events reach the status store through the listener bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return out, list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _collector(spark, warehouse):
@@ -49,7 +34,7 @@ def _envelopes(spark, events):
     return spark.createDataFrame([(json.dumps(e),) for e in events], "value string")
 
 
-def test_reads_submit_no_job_before_an_action(spark, warehouse, tmp_path):
+def test_reads_submit_no_job_before_an_action(spark, warehouse, tmp_path, jobs_during):
     t = TxnTable(spark, str(tmp_path / "t"))
     t.append(
         spark.createDataFrame([(1, "a", "2024-01")], "x long, `$server_time` string, _month string"),
@@ -59,11 +44,11 @@ def test_reads_submit_no_job_before_an_action(spark, warehouse, tmp_path):
         spark.createDataFrame([(2, "b", "2024-02")], "x long, `$server_time` string, _month string"),
         partition_col="_month",
     )
-    df, jobs = _jobs_during(spark, t.read)
+    df, jobs = jobs_during(t.read)
     assert jobs == []
     assert df.columns == ["x", "$server_time", "_month"]
     # the probe does see jobs: an action inside it is counted
-    n, jobs = _jobs_during(spark, df.count)
+    n, jobs = jobs_during(df.count)
     assert n == 2 and jobs
 
     collector = _collector(spark, warehouse)
@@ -71,14 +56,14 @@ def test_reads_submit_no_job_before_an_action(spark, warehouse, tmp_path):
     _txn_from_birth(store, "proj", "clicks")
     collector.collect("proj", "clicks", {"x": 1, "_time": "2024-03-01 10:00:00"})
     collector.collect("proj", "clicks", {"x": 2, "_time": "2024-04-01 10:00:00"})
-    clicks, jobs = _jobs_during(spark, lambda: store.read("proj", "clicks"))
+    clicks, jobs = jobs_during(lambda: store.read("proj", "clicks"))
     assert jobs == []
     assert sorted(r["x"] for r in clicks.collect()) == [1, 2]
 
     users = UserStorage(spark, collector.metastore)
     users.create("proj", "u1", {"plan": "free"})
     users.create("proj", "u2", {"score": 3})
-    table, jobs = _jobs_during(spark, lambda: users.table("proj"))
+    table, jobs = jobs_during(lambda: users.table("proj"))
     assert jobs == []
     got = {r["id"]: (r["plan"], r["score"]) for r in table.collect()}
     assert got == {"u1": ("free", None), "u2": (None, 3)}
@@ -87,7 +72,7 @@ def test_reads_submit_no_job_before_an_action(spark, warehouse, tmp_path):
     ing.process_batch(
         _envelopes(spark, [{"collection": "c", "properties": {"x": 1}, "api": {"uuid": "a"}}]), 0
     )
-    seen, jobs = _jobs_during(spark, lambda: ing._read_seen(spark, 1))
+    seen, jobs = jobs_during(lambda: ing._read_seen(spark, 1))
     assert jobs == []
     assert [(r["uuid"], r["epoch"]) for r in seen.collect()] == [("a", 0)]
 
