@@ -913,14 +913,12 @@ def cluster_safe_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
     assignment leaks whenever a pair straddles a hash boundary.
     Oracle: identical recursive-CTE components + the same md5 rule.
     """
-    from .dedup import connected_components, ngram_jaccard_pairs
+    from .dedup import _corpus_pairs, connected_components
 
     docs = _docs(spark, sf_dir)
-    # ONE shingle self-join feeds both the component resolution and
-    # the leak check (calling dedup_clusters separately would run the
-    # pair join twice — measured ~2x the wall time of this shape).
-    pairs = ngram_jaccard_pairs(spark, sf_dir).select("d1", "d2").cache()
-    pairs.count()
+    # the stored (materialized) pair set feeds both the component
+    # resolution and the leak check
+    pairs = _corpus_pairs(spark, sf_dir).select("d1", "d2")
     labels = connected_components(pairs).select("doc_id", "cluster_id")
 
     def _bucket(col):
@@ -1007,7 +1005,6 @@ def cluster_safe_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = out.localCheckpoint(eager=True)  # sever the CC lineage
     tagged.unpersist()
-    pairs.unpersist()
     return out
 
 

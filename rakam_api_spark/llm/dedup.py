@@ -27,15 +27,11 @@ docs.  Net: every shuffle is O(docs) or O(candidates), never
 O(corpus shingles), and the Python work is embarrassingly
 batch-parallel.
 
-Rule: a declared query never returns a memoized final output; a call
-recomputes from its inputs, sharing at most intermediates.  The
-MinHash-LSH queries (``dedup_minhash_lsh``, ``lsh_band_efficiency``,
-``dedup_precision_audit``) hold no cache, checkpoint or memo at all:
+The MinHash-LSH queries (``dedup_minhash_lsh``, ``lsh_band_efficiency``,
+``dedup_precision_audit``) hold no cache, checkpoint or stored entry:
 each builder returns one lazy plan and runs no Spark job before the
-caller's action.  The exact-Jaccard family still keeps per-session
-memos of its shingle frame and pair graphs; ``dedup_ngram_jaccard``
-returning the memoized 0.6 pair set it shares with the cluster
-queries is the one remaining breach of the rule.
+caller's action.  The exact-Jaccard family reads its shingle frame
+and pair graphs from the session store (:mod:`..artifacts`).
 """
 
 from __future__ import annotations
@@ -47,6 +43,7 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .. import artifacts
 from ..tables import load_table
 
 N_HASHES = 16
@@ -136,51 +133,30 @@ FROM documents
 # --- exact n-gram jaccard ------------------------------------------------
 
 
-#: per-session memo of the FULL-CORPUS shingle frame — the shared
-#: kernel of every exact-Jaccard query (clusters, threshold curve,
-#: size histogram, transitivity audit, safe splits): each used to
-#: build, cache, and count an identical copy per call.  Same safety
-#: argument as tables._TABLE_MEMO (immutable inputs, deterministic
-#: derivation); keyed weakly by session so a stopped session's cached
-#: RDD doesn't pin memory.
-from weakref import WeakKeyDictionary
-
-_SHINGLE_MEMO: "WeakKeyDictionary[SparkSession, dict]" = WeakKeyDictionary()
-
-
 def _corpus_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    try:
-        per = _SHINGLE_MEMO.setdefault(spark, {})
-        hit = per.get(sf_dir)
-        if hit is not None:
-            return hit
-    except TypeError:  # unhashable/mock session
-        per = None
-    sh = word_shingles(_docs(spark, sf_dir)).cache()
-    sh.count()  # deterministic single materialization (minhash note)
-    if per is not None:
-        per[sf_dir] = sh
-    return sh
+    """Stored, cached FULL-CORPUS shingle frame — the shared kernel of
+    every exact-Jaccard query (pairs, clusters, size histogram, safe
+    splits) and of the n-gram novelty and tf-idf reports."""
+
+    def build():
+        sh = word_shingles(_docs(spark, sf_dir)).cache()
+        sh.count()  # deterministic single materialization (minhash note)
+        return sh
+
+    return artifacts.get(spark, ("shingles", sf_dir), build)
 
 
-#: per-session memo of the VERIFIED full-corpus pair set at a given
-#: threshold — clusters, survivor selection, safe splits, the size
-#: histogram and the transitivity audit all consume the same 0.6-pair
-#: graph and each paid the shingle self-join again.  The pair set is
-#: deterministic (exact integer Jaccard, ordered output) and BOUNDED
-#: (the dedup output, not the corpus), so an eager localCheckpoint is
-#: a small pin.  Keyed weakly by session like the other memos.
-_PAIRS_MEMO: "WeakKeyDictionary[SparkSession, dict]" = WeakKeyDictionary()
-
-
-def _corpus_pairs_memo(spark: SparkSession, sf_dir: str, threshold: float):
-    """Memoized materialized result frame for the docs=None pair
-    sweep, or None when the session can't key a memo."""
-    try:
-        per = _PAIRS_MEMO.setdefault(spark, {})
-    except TypeError:
-        return None, None
-    return per, (sf_dir, float(threshold))
+def _corpus_pairs(spark: SparkSession, sf_dir: str, threshold: float = 0.6) -> DataFrame:
+    """Stored, eagerly-checkpointed full-corpus pair set at
+    ``threshold`` — the graph clusters, survivor selection, language
+    purity and safe splits all read.  Bounded (the dedup output, not
+    the corpus).  The declared ``dedup_ngram_jaccard`` is the lazy
+    :func:`ngram_jaccard_pairs` itself."""
+    return artifacts.get(
+        spark,
+        ("pairs", sf_dir, float(threshold)),
+        lambda: ngram_jaccard_pairs(spark, sf_dir, threshold).localCheckpoint(eager=True),
+    )
 
 
 #: exact-baseline skew guard: a shingle shared by k documents emits
@@ -237,18 +213,13 @@ def ngram_jaccard_pairs(
     ``_HOT_SHINGLE_DF_CAP``); ``None`` disables the guard.
     """
     if docs is None:
-        per, key = _corpus_pairs_memo(spark, sf_dir, threshold)
-        if per is not None and key in per:
-            return per[key]
         sh = _corpus_shingles(spark, sf_dir)
     else:
-        per, key = None, None
         sh = word_shingles(docs).cache()
         sh.count()  # deterministic single materialization (minhash note)
     if df_cap is not None:
-        # one aggregate over the (cached) shingle frame; on the memoized
-        # corpus path this runs once per session.  Fail loudly BEFORE
-        # the join, never quadratically inside it.
+        # one aggregate over the (cached) shingle frame.  Fail loudly
+        # BEFORE the join, never quadratically inside it.
         hot = (
             sh.groupBy("shingle")
             .agg(F.count(F.lit(1)).alias("df"))
@@ -263,14 +234,7 @@ def ngram_jaccard_pairs(
                 "minhash_lsh_pairs (banded LSH + verify) for this corpus, "
                 "or raise df_cap explicitly"
             )
-    out = _exact_pairs(sh).where(F.col("jaccard") >= threshold).orderBy("d1", "d2")
-    if per is not None:
-        # materialize the (bounded) verified pair set once; every
-        # 0.6-threshold consumer reuses it instead of re-running the
-        # shingle self-join
-        out = out.localCheckpoint(eager=True)
-        per[key] = out
-    return out
+    return _exact_pairs(sh).where(F.col("jaccard") >= threshold).orderBy("d1", "d2")
 
 
 NGRAM_JACCARD_ORACLE = """
@@ -442,8 +406,8 @@ def minhash_lsh_pairs(
     ``docs`` overrides the corpus (the precision audit passes its
     sample); the default is the full documents table — the same code
     either way.  Nothing runs until the caller's action: no cache, no
-    checkpoint, no memo, so every call recomputes from its inputs and
-    a declared query never returns a memoized final output.
+    checkpoint, no stored entry, so every call recomputes from its
+    inputs.
     """
     if docs is None:
         docs = _docs(spark, sf_dir)
@@ -860,15 +824,7 @@ def dedup_clusters(spark: SparkSession, sf_dir: str, threshold: float = 0.6) -> 
     in the component), the cluster size, and whether this doc is the
     canonical keeper.
     """
-    edges = (
-        ngram_jaccard_pairs(spark, sf_dir, threshold=threshold)
-        .select("d1", "d2")
-        .cache()
-    )
-    edges.count()
-    result = connected_components(edges)
-    edges.unpersist()
-    return result
+    return connected_components(_corpus_pairs(spark, sf_dir, threshold).select("d1", "d2"))
 
 
 def _components_driver_unionfind(edges: DataFrame) -> DataFrame:
@@ -1037,83 +993,33 @@ FROM labels l JOIN csize c USING (cluster_id)
 AUDIT_MAX_DOCS = 400
 
 
-#: per-session memo of UNTHRESHOLDED exact-Jaccard pair graphs over
-#: the deterministic hash-rank samples, keyed (sf_dir, max_docs).
-#: The transitivity audit and the threshold curve (2000 docs each)
-#: each used to re-run the shingle self-join on their own sample even though only the FINAL threshold filter
-#: differs — and exact Jaccard is a pairwise function, so the graph
-#: over a hash-rank-prefix sample is exactly the larger graph
-#: restricted to pairs with both endpoints in the prefix.  One build
-#: per (sf, sample size) now serves every threshold, and a smaller
-#: sample derives from a memoized superset by two semi-joins instead
-#: of a fresh self-join (guide §2.4: remove the shuffle outright).
-#: Same memo-safety argument as _PAIRS_MEMO (immutable inputs,
-#: deterministic derivation, bounded output, weak session key).
-_SAMPLE_GRAPH_MEMO: "WeakKeyDictionary[SparkSession, dict]" = WeakKeyDictionary()
-
-
 def _sample_pair_graph(spark: SparkSession, sf_dir: str, max_docs: int) -> DataFrame:
-    """Memoized (d1, d2, inter, jaccard) pair frame — NO threshold
-    filter — over the ``max_docs`` hash-rank sample.  Bounded by
+    """Stored (d1, d2, inter, jaccard) pair frame — NO threshold
+    filter — over the ``max_docs`` hash-rank sample: the transitivity
+    audit and the threshold curve differ only in their final
+    threshold filter, so one exact self-join serves both.  Bounded by
     max_docs·(max_docs−1)/2 rows BY CONSTRUCTION, so the eager
-    localCheckpoint is a small pin.  Falls back to an uncached build
-    for mock/unhashable sessions."""
-    try:
-        per = _SAMPLE_GRAPH_MEMO.setdefault(spark, {})
-    except TypeError:
-        per = None
-    key = (sf_dir, max_docs)
-    if per is not None:
-        hit = per.get(key)
-        if hit is not None:
-            return hit
-        # pairwise restriction of a memoized SUPERSET sample: the
-        # hash-rank sample of size m is a prefix of the sample of
-        # size M ≥ m, and every (inter, jaccard) value depends only
-        # on the two docs — so filtering the big graph to pairs with
-        # both endpoints in the small sample IS the small graph.
-        sup = [k for k in per if k[0] == sf_dir and k[1] >= max_docs]
-        if sup:
-            big = per[min(sup, key=lambda k: k[1])]
-            chosen = _audit_chosen(spark, sf_dir, max_docs)
-            out = big.join(
-                F.broadcast(chosen.withColumnRenamed("doc_id", "d1")), "d1", "left_semi"
-            ).join(
-                F.broadcast(chosen.withColumnRenamed("doc_id", "d2")), "d2", "left_semi"
-            ).select("d1", "d2", "inter", "jaccard")
-            per[key] = out
-            return out
-    sample = audit_sample(spark, sf_dir, max_docs)
-    sh = word_shingles(sample).cache()
-    sh.count()  # deterministic single materialization (minhash note)
-    hot = (
-        sh.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .agg(F.max("df").alias("max_df"))
-        .first()
-    )
-    if hot is not None and (hot["max_df"] or 0) > _HOT_SHINGLE_DF_CAP:
-        raise ValueError(
-            f"_sample_pair_graph: hottest shingle appears in {hot['max_df']} "
-            f"documents (> df_cap={_HOT_SHINGLE_DF_CAP}); use the LSH path"
+    localCheckpoint is a small pin."""
+
+    def build():
+        sh = word_shingles(audit_sample(spark, sf_dir, max_docs)).cache()
+        sh.count()  # deterministic single materialization (minhash note)
+        hot = (
+            sh.groupBy("shingle")
+            .agg(F.count(F.lit(1)).alias("df"))
+            .agg(F.max("df").alias("max_df"))
+            .first()
         )
-    out = _exact_pairs(sh)
-    if per is not None:
-        out = out.localCheckpoint(eager=True)
-        per[key] = out
+        if hot is not None and (hot["max_df"] or 0) > _HOT_SHINGLE_DF_CAP:
+            raise ValueError(
+                f"_sample_pair_graph: hottest shingle appears in {hot['max_df']} "
+                f"documents (> df_cap={_HOT_SHINGLE_DF_CAP}); use the LSH path"
+            )
+        out = _exact_pairs(sh).localCheckpoint(eager=True)
         sh.unpersist()
-    return out
+        return out
 
-
-#: per-session memo of the hash-ranked audit id frame (doc_id, _h):
-#: the TakeOrdered corpus scan behind EVERY audit_sample call — the
-#: precision audit, the transitivity audit, the threshold curve and
-#: the pair-graph restriction each re-ran it (a ~2 s full-corpus pass
-#: at sf0.1, measured r17).  ≤ max_docs rows, deterministic md5 rank,
-#: eagerly checkpointed; a smaller sample is a RANK PREFIX of a
-#: larger one, derived driver-free by re-limiting the memoized frame
-#: (guide §2.4: compute a shared intermediate once).
-_AUDIT_IDS_MEMO: "WeakKeyDictionary[SparkSession, dict]" = WeakKeyDictionary()
+    return artifacts.get(spark, ("sample_graph", sf_dir, max_docs), build)
 
 
 def _hash_rank_ids(docs: DataFrame, max_docs: int) -> DataFrame:
@@ -1127,26 +1033,14 @@ def _hash_rank_ids(docs: DataFrame, max_docs: int) -> DataFrame:
 
 
 def _audit_chosen(spark: SparkSession, sf_dir: str, max_docs: int) -> DataFrame:
-    """(doc_id) frame of the ``max_docs`` hash-rank sample."""
-    try:
-        per = _AUDIT_IDS_MEMO.setdefault(spark, {})
-    except TypeError:  # unhashable/mock session
-        per = None
-    if per is not None:
-        key = (sf_dir, max_docs)
-        hit = per.get(key)
-        if hit is not None:
-            return hit.select("doc_id")
-        sup = [k for k in per if k[0] == sf_dir and k[1] >= max_docs]
-        if sup:
-            big = per[min(sup, key=lambda k: k[1])]
-            out = big.orderBy("_h", "doc_id").limit(max_docs)
-            per[key] = out
-            return out.select("doc_id")
-    chosen = _hash_rank_ids(_docs(spark, sf_dir), max_docs)
-    if per is not None:
-        chosen = chosen.localCheckpoint(eager=True)
-        per[(sf_dir, max_docs)] = chosen
+    """(doc_id) frame of the ``max_docs`` hash-rank sample, stored as
+    an eager checkpoint so repeated samples pay the TakeOrdered
+    corpus scan once."""
+    chosen = artifacts.get(
+        spark,
+        ("audit_ids", sf_dir, max_docs),
+        lambda: _hash_rank_ids(_docs(spark, sf_dir), max_docs).localCheckpoint(eager=True),
+    )
     return chosen.select("doc_id")
 
 
@@ -1158,9 +1052,8 @@ def audit_sample(spark: SparkSession, sf_dir: str, max_docs: int) -> DataFrame:
     → TakeOrderedAndProject: per-partition heaps over a 2-column slim
     frame, no global sort, no window) followed by a broadcast
     semi-join back to the full rows — O(corpus) scan, O(max_docs)
-    memory, at any corpus size.  The id frame is memoized per session
-    (:data:`_AUDIT_IDS_MEMO`), so repeated audits pay the TakeOrdered
-    scan once."""
+    memory, at any corpus size.  The id frame is a stored entry
+    (:func:`_audit_chosen`)."""
     d = _docs(spark, sf_dir)
     return d.join(F.broadcast(_audit_chosen(spark, sf_dir, max_docs)), "doc_id")
 
@@ -1740,7 +1633,7 @@ def dedup_survivor_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     docs = _docs(spark, sf_dir)
-    pairs = ngram_jaccard_pairs(spark, sf_dir).select("d1", "d2")
+    pairs = _corpus_pairs(spark, sf_dir).select("d1", "d2")
     labels = connected_components(pairs).select("doc_id", "cluster_id")
     j = docs.join(labels, "doc_id", "left").select(
         "doc_id",
@@ -1802,12 +1695,12 @@ def dup_cluster_lang_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-dup across languages is almost always the latter, so this
     is the cheap label-QA screen that runs before any embedding job.
 
-    Plan: the memoized verified pair graph → components; ONE join to
+    Plan: the stored verified pair graph → components; ONE join to
     the doc lang column; cluster-grain distinct-lang counts; a
     histogram over them.  Everything after the (cached) pair sweep
     is dedup-output-sized."""
     docs = _docs(spark, sf_dir)
-    pairs = ngram_jaccard_pairs(spark, sf_dir).select("d1", "d2")
+    pairs = _corpus_pairs(spark, sf_dir).select("d1", "d2")
     labels = connected_components(pairs).select("doc_id", "cluster_id")
     cl = (
         labels.join(docs.select("doc_id", "lang"), "doc_id")

@@ -236,7 +236,7 @@ def dup_span_extents(
     Reference scope: beyond-reference (no analytics engine in the
     reference); companion to :func:`dup_ngram_spans`' fixed-n report.
     """
-    spans = _span_frame(spark, sf_dir, n=n, occ_cap=occ_cap, min_tokens=min_tokens)
+    spans = _span_frame_build(spark, sf_dir, n, occ_cap, min_tokens)
     return spans.orderBy(
         F.desc("span_tokens"),
         F.asc("doc_a"),
@@ -246,42 +246,12 @@ def dup_span_extents(
     ).limit(k)
 
 
-#: per-session memo of the maximal-span frame keyed
-#: (sf_dir, n, occ_cap, min_tokens): dup_span_extents and
-#: span_dedup_savings consume the IDENTICAL frame and each paid the
-#: positional-gram explode + gram aggregate + pair self-join + island
-#: windows again (guide §2.4).  The frame is bounded (hot grams are
-#: occ_cap-excluded, spans ≥ min_tokens only), deterministic, and the
-#: inputs immutable — same safety argument as dedup._PAIRS_MEMO.
-from weakref import WeakKeyDictionary
-
-_SPAN_MEMO: "WeakKeyDictionary[SparkSession, dict]" = WeakKeyDictionary()
-
-
-def _span_frame(
-    spark: SparkSession, sf_dir: str, n: int, occ_cap: int, min_tokens: int
-) -> DataFrame:
-    try:
-        per = _SPAN_MEMO.setdefault(spark, {})
-        key = (sf_dir, n, occ_cap, min_tokens)
-        hit = per.get(key)
-        if hit is not None:
-            return hit
-    except TypeError:  # unhashable/mock session
-        per, key = None, None
-    out = _span_frame_build(spark, sf_dir, n, occ_cap, min_tokens)
-    if per is not None:
-        out = out.localCheckpoint(eager=True)
-        per[key] = out
-    return out
-
-
 def _span_frame_build(
     spark: SparkSession, sf_dir: str, n: int, occ_cap: int, min_tokens: int
 ) -> DataFrame:
-    """The unlimited maximal-span frame shared by
+    """The unlimited maximal-span frame, as one lazy plan, that
     :func:`dup_span_extents` (ranked report) and
-    :func:`span_dedup_savings` (per-doc accounting)."""
+    :func:`span_dedup_savings` (per-doc accounting) each build on."""
     docs = _docs(spark, sf_dir)
     wdf = docs.select("doc_id", F.split(F.col("text"), " ").alias("w"))
     w = F.col("w")
@@ -365,7 +335,7 @@ def span_dedup_savings(
     per doc."""
     from pyspark.sql import Window
 
-    spans = _span_frame(spark, sf_dir, n=n, occ_cap=occ_cap, min_tokens=min_tokens)
+    spans = _span_frame_build(spark, sf_dir, n, occ_cap, min_tokens)
     iv = spans.select(
         F.col("doc_b").alias("doc_id"),
         F.col("start_b").alias("s"),
@@ -540,8 +510,8 @@ def sparse_tfidf_pairs(spark: SparkSession, sf_dir: str, n: int = 3, k: int = 20
     ties break on the doc-id pair."""
     docs = _docs(spark, sf_dir)
     if n == 3:
-        # identical derivation to the dedup family's memoized cached
-        # corpus shingle frame — reuse it instead of re-exploding
+        # identical derivation to the dedup family's stored corpus
+        # shingle frame — reuse it instead of re-exploding
         from .dedup import _corpus_shingles
 
         sh = _corpus_shingles(spark, sf_dir)

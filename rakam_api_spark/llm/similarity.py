@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from .. import artifacts
 from ..tables import load_table
 
 QUANT = 10_000
@@ -385,9 +386,6 @@ def embedding_cosine_dedup(
     then exact integer-quantized cosine verifies each candidate.
     Every stage is an equi-join/groupBy on its key: O(n) + O(near-
     dups), no all-pairs anywhere."""
-    # r17: the module-wide memoized component cache replaces this
-    # function's own per-call cache (which was never unpersisted —
-    # repeated calls pinned duplicate corpus-sized frames)
     comp = _compl_for(spark, sf_dir).drop("label")
     # 48 signed projections per vector: one broadcast join on pos +
     # one partial-aggregated groupBy — integer sums, codegen-side
@@ -525,7 +523,7 @@ GATE_DEDUP_THRESHOLD = 0.35
 
 
 def _cosine_dedup_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _cosine_pairs_for(spark, sf_dir, GATE_DEDUP_THRESHOLD)
+    return embedding_cosine_dedup(spark, sf_dir, threshold=GATE_DEDUP_THRESHOLD)
 
 
 # --- IVF physical layout: cell-partitioned index --------------------------
@@ -730,233 +728,110 @@ def _lloyd_fit(
     return cents, assign
 
 
-#: Session-scoped memo of the deterministic IVF/PQ fits, keyed by
-#: (sf_dir, params) per SparkSession — the in-session form of the
-#: persisted-index contract (`build_ivf_index`/`_resolve_ivf_artifact`
-#: are the on-disk form): an IVF/PQ index is built ONCE and probed by
-#: every query; refitting identical centroids per query call was the
-#: artificial part.  Safe for the same reasons as tables._TABLE_MEMO —
-#: the testdata inputs are immutable by contract and the fit is
-#: deterministic (fixed init, integer costs, ordered tiebreaks), so a
-#: memo hit returns bit-identical frames.  Keyed weakly by session so
-#: a stopped session's checkpointed RDDs don't pin memory.
-from weakref import WeakKeyDictionary
-
-_FIT_MEMO: "WeakKeyDictionary[SparkSession, dict]" = WeakKeyDictionary()
-
-#: Per-session cap on memoized fits.  The steady state per sf_dir is
-#: one component frame + norm sidecar + label-centroid table (r17),
-#: one IVF fit + its posting-list layout, one PQ fit, one brute-force
-#: truth frame and one LSH pair set (the default-parameter production
-#: artifacts); parameter sweeps (recall curves, tests with
-#: non-default k/iters) would otherwise pin a corpus-sized cached
-#: frame per distinct key for the session's lifetime.  dicts preserve
-#: insertion order, so eviction below is plain FIFO-after-refresh ==
-#: LRU.
-_FIT_MEMO_MAX = 12
-
-
-def _memo_put(per: dict, key: tuple, out: tuple) -> None:
-    """Insert ``key -> out`` into a per-session fit memo, evicting the
-    least-recently-used entry past :data:`_FIT_MEMO_MAX` and
-    best-effort unpersisting the evicted frames (frees the cached
-    component frame; localCheckpoint block cleanup follows the RDD's
-    GC as usual)."""
-    per[key] = out
-    while len(per) > _FIT_MEMO_MAX:
-        old = per.pop(next(iter(per)))
-        for frame in old:
-            try:
-                frame.unpersist()
-            except Exception:
-                pass
-
-
-def _memo_get(per: dict, key: tuple):
-    """LRU-refreshing lookup: a hit is re-inserted so sweeps that
-    revisit a fit keep it resident."""
-    hit = per.get(key)
-    if hit is not None:
-        per.pop(key)
-        per[key] = hit
-    return hit
-
-
 def _compl_for(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized CACHED labeled component frame (vec_id, label, pos, q)
+    """Stored CACHED labeled component frame (vec_id, label, pos, q)
     for the full embeddings table — the ONE in-session decode of the
-    corpus that every similarity/ANN/vectors query previously re-ran
-    per call (and, for multi-branch plans, per branch).  Same memo
-    contract as :func:`_ivf_fit_for` (the r16-audited pattern):
-    immutable inputs, deterministic projection, rebuilt from parquet
-    in every fresh process, first consumer pays the materialization.
-    At scale this is the index's resident vector storage — the same
-    corpus-sized cache :func:`_ivf_fit_for` already held."""
-    try:
-        per = _FIT_MEMO.setdefault(spark, {})
-        key = ("compl", sf_dir)
-        hit = _memo_get(per, key)
-        if hit is not None:
-            return hit[0]
-    except TypeError:  # unhashable/mock session: uncached
-        per, key = None, None
-    emb = load_table(spark, sf_dir, "embeddings")
-    out = _quantized_components_labeled(emb).cache()
-    out.count()  # single deterministic materialization
-    if per is not None:
-        _memo_put(per, key, (out,))
-    return out
+    corpus that every similarity/ANN/vectors query reads instead of
+    re-decoding per call (and, for multi-branch plans, per branch).
+    At scale this is the index's resident vector storage."""
+
+    def build():
+        out = _quantized_components_labeled(load_table(spark, sf_dir, "embeddings")).cache()
+        out.count()  # single deterministic materialization
+        return out
+
+    return artifacts.get(spark, ("compl", sf_dir), build)
 
 
 def _norms_for(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized eager checkpoint of the per-vector norm table
+    """Stored eager checkpoint of the per-vector norm table
     (vec_id, norm2) — the norm sidecar every vector index persists
-    beside its postings.  One corpus pass per process instead of one
-    per consuming query (7 call sites)."""
-    try:
-        per = _FIT_MEMO.setdefault(spark, {})
-        key = ("norms", sf_dir)
-        hit = _memo_get(per, key)
-        if hit is not None:
-            return hit[0]
-    except TypeError:
-        per, key = None, None
-    out = _norms(_compl_for(spark, sf_dir).drop("label"), "vec_id").localCheckpoint(
-        eager=True
+    beside its postings."""
+    return artifacts.get(
+        spark,
+        ("norms", sf_dir),
+        lambda: _norms(_compl_for(spark, sf_dir).drop("label"), "vec_id").localCheckpoint(
+            eager=True
+        ),
     )
-    if per is not None:
-        _memo_put(per, key, (out,))
-    return out
 
 
 def _label_cents_for(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Memoized eager checkpoint of the label-cell coarse quantizer
+    """Stored eager checkpoint of the label-cell coarse quantizer
     (label, pos, cq = floor(avg(q))) — the |labels|·dim centroid
     table of the label-IVF index, shared by :func:`ivf_topk` and
     :func:`vector_margin_histogram` (identical derivation both)."""
-    try:
-        per = _FIT_MEMO.setdefault(spark, {})
-        key = ("lcents", sf_dir)
-        hit = _memo_get(per, key)
-        if hit is not None:
-            return hit[0]
-    except TypeError:
-        per, key = None, None
-    out = (
-        _compl_for(spark, sf_dir)
+    return artifacts.get(
+        spark,
+        ("lcents", sf_dir),
+        lambda: _compl_for(spark, sf_dir)
         .groupBy("label", "pos")
         .agg(F.floor(F.avg("q")).cast("long").alias("cq"))
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=True),
     )
-    if per is not None:
-        _memo_put(per, key, (out,))
-    return out
 
 
 def _ivf_fit_for(
     spark: SparkSession, sf_dir: str, k: int = K_CELLS, iters: int = KM_ITERS
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(comp, cents, assign) for the learned-cell IVF family —
-    quantized components cached, Lloyd fit materialized, assignment
+    """(comp, cents, assign) for the learned-cell IVF family — the
+    stored component frame projected, Lloyd fit and assignment
     materialized (shared by every consumer, so the corpus-sized
     checkpoint amortizes across the family)."""
-    try:
-        per = _FIT_MEMO.setdefault(spark, {})
-        key = ("ivf", sf_dir, k, iters)
-        hit = _memo_get(per, key)
-        if hit is not None:
-            return hit
-    except TypeError:  # unhashable/mock session: fit uncached
-        per, key = None, None
-    # r17: project the module-wide cached component frame instead of
-    # caching a second corpus-sized copy — the fit's iteration jobs
-    # read the same materialization every other family member uses.
-    comp = _compl_for(spark, sf_dir).drop("label")
-    cents, assign = _lloyd_fit(comp, k, iters, materialize_assign=True)
-    out = (comp, cents, assign)
-    if per is not None:
-        _memo_put(per, key, out)
-    return out
+
+    def build():
+        comp = _compl_for(spark, sf_dir).drop("label")
+        return (comp, *_lloyd_fit(comp, k, iters, materialize_assign=True))
+
+    return artifacts.get(spark, ("ivf", sf_dir, k, iters), build)
 
 
 def _ivf_members_for(
     spark: SparkSession, sf_dir: str, k: int = K_CELLS, iters: int = KM_ITERS
 ) -> DataFrame:
-    """Memoized eager checkpoint of the cell-attached component table
+    """Stored eager checkpoint of the cell-attached component table
     (vec_id, pos, q, label) — the in-session form of the cell-
     partitioned posting-list layout :func:`build_ivf_index` persists
-    to disk.  Every probe/score consumer previously re-ran the
-    corpus-grain ``comp ⋈ assign`` join per query; the index layout
-    is query-independent, so it is built once with the fit."""
-    try:
-        per = _FIT_MEMO.setdefault(spark, {})
-        key = ("ivfmem", sf_dir, k, iters)
-        hit = _memo_get(per, key)
-        if hit is not None:
-            return hit[0]
-    except TypeError:
-        per, key = None, None
-    comp, _cents, assign = _ivf_fit_for(spark, sf_dir, k, iters)
-    out = comp.join(assign, "vec_id").localCheckpoint(eager=True)
-    if per is not None:
-        _memo_put(per, key, (out,))
-    return out
+    to disk; query-independent, so it is built once with the fit."""
+
+    def build():
+        comp, _cents, assign = _ivf_fit_for(spark, sf_dir, k, iters)
+        return comp.join(assign, "vec_id").localCheckpoint(eager=True)
+
+    return artifacts.get(spark, ("ivfmem", sf_dir, k, iters), build)
 
 
 def _brute_topk_for(
     spark: SparkSession, sf_dir: str, k: int = 5, n_queries: int = 20
 ) -> DataFrame:
-    """Memoized, eagerly-checkpointed :func:`brute_force_topk` frame.
-
-    The exact 20-query top-k is the GROUND TRUTH side of every recall
-    evaluation (``ann_recall_audit``, ``ivf_nprobe_recall_curve``,
-    ``knn_purity_at_k``) *and* a declared query itself — four
-    corpus-scale brute-force passes per run for one n_queries·k-row
-    frame.  Same contract as :func:`_ivf_fit_for`: inputs immutable,
-    kernel deterministic (exact integer-valued f64 matmul, ordered
-    tiebreaks), so a memo hit returns a bit-identical frame; the
-    checkpoint is n_queries·k rows — trivially small."""
-    try:
-        per = _FIT_MEMO.setdefault(spark, {})
-        key = ("bft", sf_dir, k, n_queries)
-        hit = _memo_get(per, key)
-        if hit is not None:
-            return hit[0]
-    except TypeError:  # unhashable/mock session: uncached
-        per, key = None, None
-    out = brute_force_topk(spark, sf_dir, k=k, n_queries=n_queries).localCheckpoint(
-        eager=True
+    """Stored, eagerly-checkpointed :func:`brute_force_topk` frame:
+    the exact top-k GROUND TRUTH the recall evaluations
+    (``ann_recall_audit``, ``ivf_nprobe_recall_curve``,
+    ``knn_purity_at_k``) compare against.  n_queries·k rows.  The
+    declared ``ann_brute_force_topk`` is the lazy builder itself."""
+    return artifacts.get(
+        spark,
+        ("bft", sf_dir, k, n_queries),
+        lambda: brute_force_topk(spark, sf_dir, k=k, n_queries=n_queries).localCheckpoint(
+            eager=True
+        ),
     )
-    if per is not None:
-        _memo_put(per, key, (out,))
-    return out
 
 
 def _cosine_pairs_for(
     spark: SparkSession, sf_dir: str, threshold: float, max_bucket: int = 200
 ) -> DataFrame:
-    """Memoized, eagerly-checkpointed :func:`embedding_cosine_dedup`
-    pair set.  The gate-threshold near-dup pairs are consumed by the
-    declared ``embedding_cosine_dedup`` query AND re-derived end to
-    end (LSH buckets → candidates → exact verify) by
-    ``crosslingual_mining``; the output is the (small) near-dup pair
-    list, so one checkpoint serves both.  Deterministic for the same
-    reasons as the fits (md5-derived hyperplanes, integer cosine,
-    ordered output)."""
-    try:
-        per = _FIT_MEMO.setdefault(spark, {})
-        key = ("cospairs", sf_dir, threshold, max_bucket)
-        hit = _memo_get(per, key)
-        if hit is not None:
-            return hit[0]
-    except TypeError:  # unhashable/mock session: uncached
-        per, key = None, None
-    out = embedding_cosine_dedup(
-        spark, sf_dir, threshold=threshold, max_bucket=max_bucket
-    ).localCheckpoint(eager=True)
-    if per is not None:
-        _memo_put(per, key, (out,))
-    return out
+    """Stored, eagerly-checkpointed :func:`embedding_cosine_dedup`
+    pair set (the small near-dup pair list) that
+    ``crosslingual_mining`` reads.  The declared
+    ``embedding_cosine_dedup`` is the lazy builder itself."""
+    return artifacts.get(
+        spark,
+        ("cospairs", sf_dir, threshold, max_bucket),
+        lambda: embedding_cosine_dedup(
+            spark, sf_dir, threshold=threshold, max_bucket=max_bucket
+        ).localCheckpoint(eager=True),
+    )
 
 
 def kmeans_ivf_topk(
@@ -1041,7 +916,7 @@ def _ivf_scored(
     candidate set at any budget n ≤ nprobe is exactly the crank ≤ n
     restriction (each vector lives in ONE cell, so crank is
     well-defined per candidate).  ``members`` / ``norms`` accept the
-    memoized index artifacts (:func:`_ivf_members_for` /
+    stored index artifacts (:func:`_ivf_members_for` /
     :func:`_norms_for`) so the per-query plan skips the corpus-grain
     join and norm aggregate; both defaults rebuild the identical
     frames inline."""
@@ -1160,9 +1035,9 @@ def ann_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     20-query brute-force scan — request-sized by construction (the
     query batch IS the bound; the corpus side stays the production
     one-pass kernel), so no extra cap parameter is needed."""
-    # memoized truth frame (already eagerly checkpointed): referenced
+    # stored truth frame (already eagerly checkpointed): referenced
     # by the hit join AND the totals agg, and shared with the curve /
-    # purity / declared brute-force queries
+    # purity audits
     truth = _brute_topk_for(spark, sf_dir).select("q_id", "neighbor_id")
     approx = kmeans_ivf_topk(spark, sf_dir).select("q_id", "neighbor_id")
     hit = approx.join(truth, ["q_id", "neighbor_id"], "left_semi")
@@ -1770,25 +1645,15 @@ def _pq_fit_for(
     kc: int = PQ_K,
     iters: int = PQ_ITERS,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """(comp, cents, codes) for the PQ family — same memo contract as
-    :func:`_ivf_fit_for`."""
-    try:
-        per = _FIT_MEMO.setdefault(spark, {})
-        key = ("pq", sf_dir, m, kc, iters)
-        hit = _memo_get(per, key)
-        if hit is not None:
-            return hit
-    except TypeError:
-        per, key = None, None
-    # r17: re-key the module-wide cached component frame instead of
-    # caching a second corpus-sized copy — the PQ layout is a pure
-    # projection of the shared materialization.
-    comp = _pq_rekey(_compl_for(spark, sf_dir).drop("label"), m)
-    cents, codes = _pq_fit(comp, kc, iters)
-    out = (comp, cents, codes)
-    if per is not None:
-        _memo_put(per, key, out)
-    return out
+    """(comp, cents, codes) for the PQ family, stored like
+    :func:`_ivf_fit_for`: the PQ layout is a re-keyed projection of
+    the stored component frame."""
+
+    def build():
+        comp = _pq_rekey(_compl_for(spark, sf_dir).drop("label"), m)
+        return (comp, *_pq_fit(comp, kc, iters))
+
+    return artifacts.get(spark, ("pq", sf_dir, m, kc, iters), build)
 
 
 def pq_ann_topk(
@@ -3738,7 +3603,7 @@ def pq_code_balance(
     quantization ⇒ recall loss) before it ships.  Companion to
     ``pq_reconstruction_error``'s distortion view.
 
-    Plan: rides the memoized deterministic PQ fit; the audit itself
+    Plan: rides the stored deterministic PQ fit; the audit itself
     is one (m, code) aggregate over the materialized assignment and
     an |subspaces|-row rollup.  Entropy follows the rounded-term
     DECIMAL contract; shares are double divisions of exact counts."""
@@ -3937,7 +3802,7 @@ QUERIES = {
     "crosslingual_mining": crosslingual_mining,
     "embedding_drift_by_label": embedding_drift_by_label,
     "knn_label_propagation": knn_label_propagation,
-    "ann_brute_force_topk": _brute_topk_for,
+    "ann_brute_force_topk": brute_force_topk,
     "ann_filtered_topk": ann_filtered_topk,
     "semantic_contamination": semantic_contamination,
     "ann_ivf_topk": ivf_topk,

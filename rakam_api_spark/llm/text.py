@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from .. import artifacts
 from ..tables import load_table
 
 # Small fixed stopword list (subset of English function words that
@@ -766,7 +767,7 @@ def doc_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     join back, one doc-grain rollup — never a self-join, never a
     window over the corpus; both shuffles key on the shingle/doc_id
     the dedup family already uses — r16: literally the dedup
-    family's memoized cached shingle frame now (identical
+    family's stored cached shingle frame now (identical
     derivation), so the corpus explode+distinct runs once per
     session across both families.  ``novelty_frac`` is a single
     exact-integer division.
@@ -2371,27 +2372,16 @@ FROM sh ORDER BY source_a, source_b
 """
 
 
-#: per-session memo of the cached (doc, bigram) count frame and its
-#: driver-side constants (lang list, smoothing denominators) — the
-#: classifier kernel of ``lang_profile_confusion``.  Without it every
-#: call re-cached a duplicate frame and re-ran the two scalar jobs at
-#: plan-construction time (ADVICE r16); with it the driver actions run
-#: once per (session, sf_dir), the same discipline as
-#: ``dedup._corpus_shingles``.  Keyed weakly by session.
-from weakref import WeakKeyDictionary
-
-_LANG_BG_MEMO: "WeakKeyDictionary[SparkSession, dict]" = WeakKeyDictionary()
-
-
 def _lang_bigram_counts(spark: SparkSession, sf_dir: str):
-    """(cached dc frame, sorted langs, per-lang smoothing denoms)."""
-    try:
-        per = _LANG_BG_MEMO.setdefault(spark, {})
-        hit = per.get(sf_dir)
-        if hit is not None:
-            return hit
-    except TypeError:  # unhashable/mock session
-        per = None
+    """Stored (cached dc frame, sorted langs, per-lang smoothing
+    denoms) — the classifier kernel of ``lang_profile_confusion``;
+    its two scalar jobs run once per (session, sf_dir)."""
+    return artifacts.get(
+        spark, ("lang_bigrams", sf_dir), lambda: _lang_bigram_build(spark, sf_dir)
+    )
+
+
+def _lang_bigram_build(spark: SparkSession, sf_dir: str):
     docs = _docs(spark, sf_dir)
     bg = F.explode(
         F.expr(
@@ -2415,10 +2405,7 @@ def _lang_bigram_counts(spark: SparkSession, sf_dir: str):
     ).first()
     v = int(stats["v"])
     denom = [int(stats[f"nl{i}"]) + v for i in range(len(langs))]
-    out = (dc, langs, denom)
-    if per is not None:
-        per[sf_dir] = out
-    return out
+    return dc, langs, denom
 
 
 def lang_profile_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:

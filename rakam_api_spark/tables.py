@@ -55,6 +55,8 @@ _NS_PER_DAY = 86_400_000_000_000
 #: pure driver time), which multiplied over a 240-query bench run
 #: (2 runs × 2-6 tables each) is tens of seconds of nothing.  Keyed
 #: weakly by session so a stopped session's plans don't pin memory.
+#: A plain plan memo, not an ``artifacts`` entry: it holds no Spark
+#: storage, so there is nothing to release.
 from weakref import WeakKeyDictionary
 
 _TABLE_MEMO: "WeakKeyDictionary[SparkSession, dict]" = WeakKeyDictionary()
@@ -62,17 +64,10 @@ _TABLE_MEMO: "WeakKeyDictionary[SparkSession, dict]" = WeakKeyDictionary()
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     configure_runtime(spark)
-    try:
-        per = _TABLE_MEMO.setdefault(spark, {})
-        key = (sf_dir, name)
-        hit = per.get(key)
-        if hit is not None:
-            return hit
-    except TypeError:  # unhashable/mock session: just load uncached
-        per, key = None, None
-    df = _load_table(spark, sf_dir, name)
-    if per is not None:
-        per[key] = df
+    per = _TABLE_MEMO.setdefault(spark, {})
+    df = per.get((sf_dir, name))
+    if df is None:
+        df = per[(sf_dir, name)] = _load_table(spark, sf_dir, name)
     return df
 
 

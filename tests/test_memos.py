@@ -1,11 +1,14 @@
-"""Round-13 memo infrastructure: footer-metadata row counts
-(tables.table_rowcount), the bounded LRU on the IVF/PQ fit memo, and
-the shared corpus shingle memo."""
+"""Session reuse infrastructure: footer-metadata row counts
+(tables.table_rowcount), the bounded LRU of the session artifact
+store, and the stored shingle and embedding artifacts."""
 
 import sys
+import threading
+import time
 
 sys.path.insert(0, "/root/repo")
 
+from rakam_api_spark import artifacts
 from rakam_api_spark.llm import similarity as sim
 from rakam_api_spark.tables import _ROWCOUNT_MEMO, table_rowcount
 
@@ -23,49 +26,60 @@ def test_table_rowcount_reads_footer_without_session(spark):
     assert n == spark.read.parquet(f"{SF}/customer.parquet").count()
 
 
-def test_fit_memo_lru_bounds_and_refreshes():
-    per = {}
-    class _Frame:
-        def __init__(self):
-            self.unpersisted = False
-        def unpersist(self):
-            self.unpersisted = True
+class _Frame:
+    def __init__(self):
+        self.unpersisted = False
 
+    def unpersist(self):
+        self.unpersisted = True
+
+
+class _Session:
+    """Stands in for a SparkSession as the store's weak key."""
+
+
+def test_store_lru_bounds_unpersists_and_refreshes():
+    session = _Session()
+    st = artifacts.store(session)
     frames = {}
-    for i in range(sim._FIT_MEMO_MAX + 2):
-        frames[i] = (_Frame(),)
-        sim._memo_put(per, ("k", i), frames[i])
-    assert len(per) == sim._FIT_MEMO_MAX
-    # the two oldest were evicted AND unpersisted
-    assert frames[0][0].unpersisted and frames[1][0].unpersisted
-    assert not frames[2][0].unpersisted
+    for i in range(artifacts.MAX_ENTRIES + 2):
+        frames[i] = (_Frame(), _Frame())
+        assert artifacts.get(session, ("k", i), lambda i=i: frames[i]) is frames[i]
+    assert st.resident == artifacts.MAX_ENTRIES
+    assert (st.builds, st.evictions) == (artifacts.MAX_ENTRIES + 2, 2)
+    # the two oldest were evicted AND every frame of each unpersisted
+    assert all(f.unpersisted for i in (0, 1) for f in frames[i])
+    assert not any(f.unpersisted for f in frames[2])
     # a hit refreshes recency: key 2 survives the next insert, key 3
     # (now oldest) is evicted instead
-    assert sim._memo_get(per, ("k", 2)) is frames[2]
-    sim._memo_put(per, ("k", 99), (_Frame(),))
-    assert ("k", 2) in per and ("k", 3) not in per
-    assert frames[3][0].unpersisted
+    assert artifacts.get(session, ("k", 2), lambda: None) is frames[2]
+    assert st.hits == 1
+    single = _Frame()
+    assert artifacts.get(session, ("k", 99), lambda: single) is single
+    assert ("k", 2) in st.entries and ("k", 3) not in st.entries
+    assert all(f.unpersisted for f in frames[3])
+    assert st.resident == artifacts.MAX_ENTRIES and st.evictions == 3
 
 
-def test_corpus_shingle_memo_returns_same_frame(spark):
-    from rakam_api_spark.llm.dedup import _SHINGLE_MEMO, _corpus_shingles
+def test_corpus_shingles_stored_once(spark):
+    from rakam_api_spark.llm.dedup import _corpus_shingles
 
-    _SHINGLE_MEMO.pop(spark, None)
     a = _corpus_shingles(spark, SF)
-    b = _corpus_shingles(spark, SF)
-    assert a is b
+    st = artifacts.store(spark)
+    builds = st.builds
+    assert _corpus_shingles(spark, SF) is a
+    assert st.builds == builds
 
 
-def test_embedding_artifact_memos_identity_and_values(spark):
-    """r17 batch 10: the shared embedding-family artifacts are
-    memoized per (session, sf_dir) AND value-identical to the inline
-    derivations they replaced."""
+def test_embedding_artifacts_identity_and_values(spark):
+    """The shared embedding-family artifacts are stored per
+    (session, sf_dir) AND value-identical to the inline derivations
+    they replaced."""
     from pyspark.sql import functions as F
 
     from rakam_api_spark.tables import load_table
 
-    sim._FIT_MEMO.pop(spark, None)
-    # memo identity: second call returns the same frame object
+    # store identity: second call returns the same frame object
     compl = sim._compl_for(spark, SF)
     assert sim._compl_for(spark, SF) is compl
     norms = sim._norms_for(spark, SF)
@@ -86,8 +100,38 @@ def test_embedding_artifact_memos_identity_and_values(spark):
     )
     assert cents.exceptAll(raw_cents).count() == 0
 
-    # members == comp joined to the memoized fit's assignment
+    # members == comp joined to the stored fit's assignment
     comp, _c, assign = sim._ivf_fit_for(spark, SF)
     raw_members = comp.join(assign, "vec_id")
     assert members.exceptAll(raw_members).count() == 0
     assert members.count() == raw.count()  # one row per component
+
+
+def test_store_builds_each_entry_once_across_threads():
+    session = _Session()
+    calls = []
+
+    def build():
+        calls.append(1)
+        time.sleep(0.01)
+        return _Frame()
+
+    got = []
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [
+            threading.Thread(target=lambda: got.append(artifacts.get(session, "k", build)))
+            for _ in range(16)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=30)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert len(calls) == 1 and len(got) == 16
+    assert all(v is got[0] for v in got)
+    st = artifacts.store(session)
+    assert (st.builds, st.hits) == (1, 15)
