@@ -48,10 +48,6 @@ def _cdf_warehouse(spark: SparkSession, sf_dir: str) -> str:
     ms = Metastore(warehouse)
     ms.create_project("cdfp")
     store = EventStore(spark, ms)
-    # the maintenance lock file lives in the project directory, which
-    # only materializes on first ingest — create it for the direct path
-    os.makedirs(os.path.join(warehouse, "cdfp"), exist_ok=True)
-    store.enable_txn("cdfp", "orders")
     txn = store.txn_table("cdfp", "orders")
     orders = load_table(spark, sf_dir, "orders")
     slices = (
@@ -163,8 +159,6 @@ def _mv_warehouse(spark: SparkSession, sf_dir: str) -> str:
     ms = Metastore(warehouse)
     ms.create_project("mvp")
     store = EventStore(spark, ms)
-    os.makedirs(os.path.join(warehouse, "mvp"), exist_ok=True)
-    store.enable_txn("mvp", "orders")
     txn = store.txn_table("mvp", "orders")
     # keep the fixture to registerable column types (the metastore's
     # ingest type system has no NTZ timestamp; the view needs none)

@@ -319,11 +319,6 @@ class EventCollector:
                 )
             metrics = obs.get
             stored = int(metrics["n"])
-            if stored == 0:
-                # the observed write of an empty batch leaves a
-                # file-less dir behind — drop it so collection
-                # existence still means "has stored rows"
-                self.store.remove_if_fileless(project, collection)
             dead = int(metrics["n_bad"])
             if dead > 0:
                 # dead row count is already known exactly (one dead-

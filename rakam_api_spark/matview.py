@@ -372,15 +372,10 @@ class MaterializedViewService:
         bases = sorted(rel_counts)
         if not bases:
             raise ValueError("view statement references no collection")
-        known = set(self.store.metastore.collections(project))
+        known = set(self.store.collections(project))
         for coll in bases:
             if coll not in known:
                 raise ValueError(f"unknown collection: {coll}")
-            if not self.store.txn_mode(project, coll):
-                raise ValueError(
-                    f"{coll} is not transaction-logged; enable_txn first — "
-                    "view staleness/increments are commit-log facts"
-                )
         # crash idempotency: a <name>.txn directory with NO meta file
         # is an orphan from a create (or drop) that died between the
         # data write and the meta write — re-running create must not

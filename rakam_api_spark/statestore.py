@@ -6,10 +6,10 @@ through this one interface:
 - the streaming seen-uuid set's ``CURRENT`` version pointer
   (streaming/job.py),
 - per-epoch stream commit markers (streaming/job.py),
-- the user-table bucket swaps (users.py ``_merge_partitions``),
-- (the event-table ``TABLE_VERSION_*`` pointer lives in the
-  metastore's config JSON, which is itself an atomic
-  ``os.replace`` — same contract, different file).
+- the user-table bucket swaps (users.py ``_merge_partitions``).
+
+(Event collections keep no pointer: their state is the txn log's
+O_EXCL commit files, txnlog.py.)
 
 The reference keeps the equivalent state in MySQL/DynamoDB
 (rakam-aws/.../kinesis checkpointing; MysqlMetastore); a Spark

@@ -1,4 +1,5 @@
-"""Event store: partitioned Parquet tables per (project, collection).
+"""Event store: one transaction-logged Parquet table per (project,
+collection).
 
 Re-expresses the reference's EventStore SPI (rakam-spi/.../plugin/
 EventStore.java:10-25) and the Postgres implementation's layout
@@ -6,31 +7,38 @@ EventStore.java:10-25) and the Postgres implementation's layout
 project namespace, time-partitioned.
 
 Spark mapping decisions:
-- layout: ``{warehouse}/{project}/{collection}/`` parquet, hive-
-  partitioned by ``_month=YYYY-MM`` derived from ``_time`` — the
-  Delta-less analog of the reference's PG10 monthly RANGE partitions
-  (PostgresqlEventStore.java:103-170); partitions appear implicitly
-  on write (no "missing partition" retry dance needed).
-- appends are atomic per micro-batch (parquet job commit), replacing
-  the reference's 5000-row JDBC commit chunks
-  (PostgresqlEventStore.java:186).
-- dead-letter rows go to ``{project}/$invalid_schema`` —
-  an event collection of its own, as in the reference
-  (JsonEventDeserializer.java:85-93).
-- reads merge schema across partition files so old files served
-  under an evolved (wider) schema read as NULL-padded — the
-  add-column-only evolution contract.
+- layout: ``{warehouse}/{project}/{collection}.txn/`` is a
+  :class:`txnlog.TxnTable` — parquet files hive-partitioned by
+  ``_month=YYYY-MM`` derived from ``_time`` (the analog of the
+  reference's PG10 monthly RANGE partitions,
+  PostgresqlEventStore.java:103-170) plus a ``_txn`` commit log that
+  names the live files.
+- every write is one atomic commit — append, compaction, expiry,
+  erase — replacing the reference's 5000-row JDBC commit chunks
+  (PostgresqlEventStore.java:186); concurrent writers are arbitrated
+  by the log's O_EXCL commit slots.
+- reads take the file list and the schema from the log: files
+  written before an ADD COLUMN read NULL for it (the add-column-only
+  evolution contract), and retired files or crash orphans in the
+  directory are never read.
+- dead-letter rows go to ``{project}/$invalid_schema`` — an
+  append-only parquet directory, as in the reference
+  (JsonEventDeserializer.java:85-93); it is never rewritten, so it
+  needs no log.
+- a collection an older release wrote as a plain parquet directory
+  is migrated once by :meth:`EventStore.enable_txn`; until then every
+  read or write of it raises.
 
-At 100 TB: the month partition column prunes scans for time-ranged
-analytics; within a partition, files are sized by the writer's task
-parallelism. A production deployment would add bucketing by _user
+At 100 TB: the month partition prunes scans for time-ranged
+analytics, and the manifest's per-file stats and blooms skip files
+within a month. A production deployment would add bucketing by _user
 for the sessionization/funnel workloads (SPARK-19256 hive bucketing)
 — noted in operator docstrings where it applies.
 """
 
 from __future__ import annotations
 
-import hashlib
+import fcntl
 import json
 import os
 import re
@@ -41,7 +49,6 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from .catalog import Metastore
 
@@ -143,363 +150,64 @@ def _safe(name: str) -> str:
 
 
 class MaintenanceLockHeld(RuntimeError):
-    """Another LIVE process holds the maintenance lock for this
-    collection — refusing to start a second concurrent rewrite."""
+    """Another process or thread holds this collection's maintenance
+    lock — refusing to start a second concurrent maintenance job."""
 
 
 class _MaintenanceLock:
-    """Advisory per-collection writer lock: atomic O_EXCL create with
-    the holder pid inside; stale locks (holder dead) are broken and
-    re-acquired.  Context manager; RE-ENTRANT within one process
-    (erase_user republishes derived tables under its own lock).
+    """Per-collection writer lock: ``flock(LOCK_EX | LOCK_NB)`` on a
+    lock file that is never unlinked (unlinking on release would let
+    two processes lock different inodes).  A contender fails fast
+    with :class:`MaintenanceLockHeld` — no blocking, no queue; the
+    caller retries on its own schedule, as the reference retries
+    concurrent DDL (PostgresqlMetastore.java:256,343-346).  The kernel
+    drops a dead or killed holder's lock with its descriptor, so no
+    pid is recorded and nothing is ever "broken"; a stopped holder
+    keeps it.
 
-    Concurrency contract (pinned by tests/test_lock_contention.py
-    with live contending processes):
+    Re-entrant per THREAD (erase_user republishes derived tables
+    under its own lock); a sibling thread of the holder contends like
+    a foreign process."""
 
-    - N simultaneous acquirers: the O_EXCL create arbitrates —
-      exactly one holds, every other LIVE-holder loser fails FAST
-      with :class:`MaintenanceLockHeld` (no blocking, no queue; the
-      caller retries on its own schedule, as the reference retries
-      concurrent DDL,
-      rakam-postgresql/src/main/java/org/rakam/postgresql/PostgresqlMetastore.java:256,343-346).
-    - A loser never clobbers a live holder's lock file.
-    - A holder that dies mid-hold (crash, SIGKILL) leaves the pid
-      file behind; the next acquirer detects the dead pid, breaks
-      the stale lock, and takes over — so one crashed maintenance
-      job can never wedge a collection.
-    - Stale detection is scope-dependent — see "Scope" below; the
-      default assumes all maintenance writers share this host.
-
-    Atomicity: the pid file is published via write-private-temp then
-    ``os.link(tmp, lockpath)`` — the lock file NEVER exists empty, so
-    a contender can never misread a live holder as "unreadable ⇒
-    stale" (the window a plain O_EXCL-create-then-write leaves open
-    between create and flush).  Stale-lock BREAKS are serialized
-    through an O_EXCL ``<lock>.break`` sentinel: the sole sentinel
-    holder re-reads the pid under the sentinel and only then retires
-    the file, so a breaker acting on stale information can never
-    displace a FRESH lock (ADVICE r9: the prior rename/verify/restore
-    protocol left the canonical path briefly absent on a mis-aimed
-    break, letting a third contender acquire alongside the displaced
-    holder).  A breaker that crashes mid-break leaves a dead-pid
-    sentinel that the next contender clears.
-
-    Re-entrancy is PER-THREAD: a sibling thread of the same process
-    contending for a held path gets :class:`MaintenanceLockHeld`,
-    exactly like a foreign process (the round-9 query service made
-    driver threading a supported pattern); only the holding thread
-    re-enters.
-
-    Scope (``scope`` parameter / ``EventStore(maintenance_lock_scope=)``):
-
-    - ``"host"`` (default): stale detection via ``kill(pid, 0)`` —
-      correct ONLY when every maintenance writer runs on this host.
-    - ``"external"``: pid liveness is meaningless across hosts (a
-      foreign pid number says nothing over NFS/object storage), so a
-      foreign lock file is ALWAYS treated as held and never broken —
-      fail closed.  Use this on multi-host deployments, where
-      at-most-one-maintenance-job arbitration and crashed-holder
-      cleanup belong to an external scheduler/lock service (or move
-      the warehouse to Delta/Iceberg, whose commit protocol subsumes
-      the lock).  The txn log's commit arbitration is unaffected
-      either way (O_EXCL per commit file, no liveness inference)."""
-
-    #: process-local registries, all mutations under _REG_LOCK.
-    #: _DEPTH: re-entrant depth per (path, thread ident) — keying by
-    #: path alone let a SECOND THREAD enter as "re-entrant" while the
-    #: first held (VERDICT r9 What's wrong #2).  _HELD: path → thread
-    #: ident that is holding OR mid-acquisition in this process; the
-    #: reservation is taken BEFORE the file protocol starts, so no two
-    #: threads of one process ever run the file protocol concurrently
-    #: (which also means an own-pid lock file seen during the protocol
-    #: can only be crash-restart debris, never a sibling thread's).
     _REG_LOCK = threading.Lock()
-    _DEPTH: dict[tuple[str, int], int] = {}
-    _HELD: dict[str, int] = {}
+    #: path -> [holding thread ident, descriptor, depth]
+    _HELD: dict[str, list] = {}
 
-    def __init__(self, path: str, scope: str = "host"):
-        if scope not in ("host", "external"):
-            raise ValueError(f"unknown maintenance lock scope: {scope!r}")
+    def __init__(self, path: str):
         self.path = path
-        self.scope = scope
-
-    def _try_acquire(self) -> bool:
-        # Write the pid to a private temp first, then publish with a
-        # hardlink: creation is atomic WITH contents (never empty).
-        tmp = f"{self.path}.tmp.{os.getpid()}.{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            f.write(str(os.getpid()))
-            f.flush()
-            os.fsync(f.fileno())
-        try:
-            os.link(tmp, self.path)
-        except FileExistsError:
-            return False
-        finally:
-            try:
-                os.unlink(tmp)
-            except FileNotFoundError:
-                pass
-        return True
-
-    @staticmethod
-    def _pid_alive(pid: int) -> bool:
-        try:
-            os.kill(pid, 0)
-        except ProcessLookupError:
-            return False
-        except PermissionError:
-            return True
-        return True
-
-    def _read_pid(self, path: str) -> int:
-        """Holder pid inside a lock/sentinel file: -1 when the file is
-        gone (released between probes), raises MaintenanceLockHeld on
-        an unreadable file (publication is atomic-with-contents, so
-        unreadable = filesystem damage — fail closed, never break)."""
-        try:
-            return int(open(path).read().strip() or 0)
-        except FileNotFoundError:
-            return -1
-        except (OSError, ValueError):
-            raise MaintenanceLockHeld(
-                f"{path}: lock file unreadable; refusing to break"
-            )
-
-    def _break_stale(self, holder: int) -> None:
-        """Retire a dead holder's lock file, arbitrated through an
-        O_EXCL ``<lock>.break`` sentinel so AT MOST ONE contender may
-        break at a time (ADVICE r9 medium: the old rename-away/verify/
-        restore protocol left the canonical path ABSENT between a
-        mis-aimed rename and its restore — a third contender could
-        O_EXCL-acquire in that gap while the displaced fresh holder
-        still believed it held, i.e. two live critical sections).
-
-        With the sentinel the canonical lock path has exactly two
-        writers ever: acquirers (O_EXCL link, only when absent) and
-        the SOLE sentinel holder (rename-away, only after re-reading a
-        dead pid UNDER the sentinel).  While the sentinel is held and
-        the holder pid is dead, nothing else can legally remove or
-        replace the canonical file — the dead holder's __exit__ can
-        never run and rival breakers are excluded — so the rename is
-        guaranteed to retire exactly the file that was verified; the
-        post-rename pid re-check is defense in depth and bows out
-        (restore + Held) rather than stealing if it ever fires."""
-        sentinel = self.path + ".break"
-        for attempt in range(2):
-            tmp = f"{sentinel}.tmp.{os.getpid()}.{uuid.uuid4().hex}"
-            with open(tmp, "w") as f:
-                f.write(str(os.getpid()))
-                f.flush()
-                os.fsync(f.fileno())
-            try:
-                os.link(tmp, sentinel)
-                got_sentinel = True
-            except FileExistsError:
-                got_sentinel = False
-            finally:
-                try:
-                    os.unlink(tmp)
-                except FileNotFoundError:
-                    pass
-            if got_sentinel:
-                break
-            breaker = self._read_pid(sentinel)  # raises if unreadable
-            if breaker == -1:
-                continue  # sentinel released between probes; retry
-            if breaker != os.getpid() and self._pid_alive(breaker):
-                raise MaintenanceLockHeld(
-                    f"{self.path}: contender pid {breaker} is mid-break; "
-                    "retry later"
-                )
-            # Breaker crashed mid-break: clear its sentinel by
-            # rename-to-private + pid VERIFY — a plain unlink could
-            # delete a LIVE breaker's fresh sentinel published between
-            # our read and the unlink (VERDICT r10 What's wrong #2),
-            # and from there two processes would both believe they
-            # held the break arbitration.
-            grave = f"{sentinel}.stale.{os.getpid()}.{uuid.uuid4().hex}"
-            try:
-                os.rename(sentinel, grave)
-            except FileNotFoundError:
-                continue  # a rival cleaner got it; retry the create
-            got = -1
-            try:
-                got = int(open(grave).read().strip() or 0)
-            except (OSError, ValueError):
-                pass
-            if got != breaker:
-                # we renamed a FRESH sentinel that replaced the debris
-                # after our read — restore it and yield to its owner
-                # (a live breaker always writes its own live pid, so a
-                # wrong rename can never verify as the dead pid)
-                try:
-                    os.link(grave, sentinel)
-                except FileExistsError:
-                    pass  # a third contender claimed; the break is theirs
-                try:
-                    os.unlink(grave)
-                except FileNotFoundError:
-                    pass
-                raise MaintenanceLockHeld(
-                    f"{self.path}: a live breaker replaced the crashed "
-                    "sentinel; retry later"
-                )
-            try:
-                os.unlink(grave)
-            except FileNotFoundError:
-                pass
-            # verified crash debris cleared; retry the O_EXCL creation
-        else:
-            raise MaintenanceLockHeld(
-                f"{self.path}: could not arbitrate stale-lock break"
-            )
-        try:
-            # Re-read UNDER the sentinel — the pre-sentinel read may
-            # be stale (the lock could have turned over meanwhile).
-            current = self._read_pid(self.path)
-            if current == -1:
-                return  # released meanwhile; nothing to break
-            if (
-                current > 0
-                and current != os.getpid()
-                and self._pid_alive(current)
-            ):
-                raise MaintenanceLockHeld(
-                    f"{self.path} held by live pid {current}; maintenance "
-                    "ops are single-writer per collection"
-                )
-            # Last-instant ownership re-check: the canonical rename is
-            # only legal for the CURRENT sentinel holder.  If our
-            # sentinel was mis-cleared and a rival breaker published
-            # its own, bow out instead of displacing a file we no
-            # longer arbitrate (VERDICT r10 Next #2).
-            if self._read_pid(sentinel) != os.getpid():
-                raise MaintenanceLockHeld(
-                    f"{self.path}: lost the break sentinel; retry later"
-                )
-            broken = f"{self.path}.breaking.{os.getpid()}.{uuid.uuid4().hex}"
-            try:
-                os.rename(self.path, broken)
-            except FileNotFoundError:
-                return  # released between read and rename
-            renamed = -1
-            try:
-                renamed = int(open(broken).read().strip() or 0)
-            except (OSError, ValueError):
-                pass
-            if renamed != current:
-                # cannot happen under the sentinel invariant; bow out
-                # without stealing if it ever does
-                restored = False
-                try:
-                    os.link(broken, self.path)
-                    restored = True
-                except FileExistsError:
-                    pass
-                if restored:
-                    try:
-                        os.unlink(broken)
-                    except FileNotFoundError:
-                        pass
-                # if the canonical slot was re-taken before the restore
-                # could land, KEEP the displaced copy on disk (private
-                # quarantine name) — never destroy the only copy of a
-                # possibly-live holder's lock file (VERDICT r10 #2)
-                raise MaintenanceLockHeld(f"{self.path}: lost stale-break race")
-            try:
-                os.unlink(broken)
-            except FileNotFoundError:
-                pass
-        finally:
-            # Ownership-aware release: only remove the sentinel if it
-            # still carries OUR pid — after a bow-out above it may be a
-            # rival's live sentinel, which must survive us.  (While our
-            # own sentinel exists nothing may legally replace it — we
-            # are alive, and cleanup only clears dead pids — so the
-            # read-then-unlink here cannot race.)
-            try:
-                if self._read_pid(sentinel) == os.getpid():
-                    os.unlink(sentinel)
-            except (MaintenanceLockHeld, FileNotFoundError):
-                pass  # unreadable/absent: fail closed, leave it alone
-
-    def _acquire_file(self) -> None:
-        """The cross-process file protocol (single thread per process
-        per path by the _HELD reservation)."""
-        if self._try_acquire():
-            return
-        holder = self._read_pid(self.path)  # raises if unreadable
-        if holder > 0 and holder != os.getpid() and self.scope == "external":
-            # Cross-host deployment: a foreign pid number proves
-            # nothing here, so never infer staleness — the external
-            # scheduler/lock service owns crashed-holder cleanup.
-            raise MaintenanceLockHeld(
-                f"{self.path} held (pid {holder}); scope=external never "
-                "breaks foreign locks — stale cleanup belongs to the "
-                "external lock service"
-            )
-        if holder > 0 and holder != os.getpid() and self._pid_alive(holder):
-            raise MaintenanceLockHeld(
-                f"{self.path} held by live pid {holder}; maintenance ops are "
-                "single-writer per collection"
-            )
-        if holder > 0:
-            # stale (holder dead) or own-pid crash-restart debris (no
-            # sibling thread can own it — we hold the _HELD
-            # reservation): break it, serialized by the sentinel
-            self._break_stale(holder)
-        if not self._try_acquire():
-            raise MaintenanceLockHeld(f"{self.path}: lost acquisition race")
 
     def __enter__(self):
         me = threading.get_ident()
-        cls = type(self)
-        key = (self.path, me)
-        with cls._REG_LOCK:
-            if cls._DEPTH.get(key, 0) > 0:
-                cls._DEPTH[key] += 1  # re-entrant: already THIS thread's
+        with self._REG_LOCK:
+            held = self._HELD.get(self.path)
+            if held is not None:
+                if held[0] != me:
+                    raise MaintenanceLockHeld(
+                        f"{self.path} held by thread {held[0]} of this process; "
+                        "maintenance ops are single-writer per collection"
+                    )
+                held[2] += 1
                 return self
-            other = cls._HELD.get(self.path)
-            if other is not None:
-                # a SIBLING THREAD holds (or is acquiring) — that is
-                # contention, not re-entrancy (VERDICT r9 #2)
+            os.makedirs(os.path.dirname(self.path), exist_ok=True)
+            fd = os.open(self.path, os.O_RDWR | os.O_CREAT, 0o644)
+            try:
+                fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+            except BlockingIOError:
+                os.close(fd)
                 raise MaintenanceLockHeld(
-                    f"{self.path} held by thread {other} of this process; "
-                    "maintenance ops are single-writer per collection"
-                )
-            cls._HELD[self.path] = me  # reserve before the file protocol
-        try:
-            self._acquire_file()
-        except BaseException:
-            with cls._REG_LOCK:
-                cls._HELD.pop(self.path, None)
-            raise
-        with cls._REG_LOCK:
-            cls._DEPTH[key] = 1
+                    f"{self.path} held by another process; maintenance ops "
+                    "are single-writer per collection"
+                ) from None
+            self._HELD[self.path] = [me, fd, 1]
         return self
 
     def __exit__(self, *exc):
-        me = threading.get_ident()
-        cls = type(self)
-        key = (self.path, me)
-        with cls._REG_LOCK:
-            depth = cls._DEPTH.get(key, 1) - 1
-            if depth > 0:
-                cls._DEPTH[key] = depth
-                return False
-            # Unlink BEFORE releasing the _HELD reservation (both under
-            # _REG_LOCK): popping first opened a window where a sibling
-            # thread could reserve, see the own-pid file as crash
-            # debris, break it and acquire fresh — and THIS thread's
-            # delayed unlink then deleted the sibling's live lock,
-            # letting a foreign process in alongside it (ADVICE r10).
-            try:
-                os.unlink(self.path)
-            except FileNotFoundError:
-                pass
-            cls._DEPTH.pop(key, None)
-            cls._HELD.pop(self.path, None)
+        with self._REG_LOCK:
+            held = self._HELD[self.path]
+            held[2] -= 1
+            if held[2] == 0:
+                del self._HELD[self.path]
+                os.close(held[1])  # releases the flock
         return False
 
 
@@ -524,53 +232,37 @@ class EventStore:
     #: touched key; the consumption merge re-reads all of them)
     MATVIEW_COMPACT_FRAGMENTS = 8
 
-    def __init__(
-        self,
-        spark: SparkSession,
-        metastore: Metastore,
-        maintenance_lock_scope: str = "host",
-    ):
-        """``maintenance_lock_scope``: ``"host"`` (default) uses pid
-        liveness to break crashed holders' locks — valid only when
-        every maintenance writer shares this host; ``"external"``
-        never breaks foreign locks (fail closed) and expects an
-        external scheduler/lock service (or a Delta/Iceberg
-        warehouse) to arbitrate multi-host maintenance.  See
-        :class:`_MaintenanceLock` for the full contract."""
+    def __init__(self, spark: SparkSession, metastore: Metastore):
         self.spark = spark
         self.metastore = metastore
         self.warehouse = metastore.warehouse_dir
-        if maintenance_lock_scope not in ("host", "external"):
-            raise ValueError(
-                f"unknown maintenance_lock_scope: {maintenance_lock_scope!r}"
-            )
-        self.maintenance_lock_scope = maintenance_lock_scope
 
     def _base_path(self, project: str, collection: str) -> str:
         return os.path.join(self.warehouse, _safe(project), _safe(collection))
 
-    def _table_path(self, project: str, collection: str) -> str:
-        """Current physical directory for a collection.  Compaction
-        writes a NEW versioned directory and swaps the metastore
-        pointer (one atomic JSON replace) — the Iceberg/Delta
-        "current snapshot pointer" pattern — so readers never observe
-        a missing or half-written table path."""
-        base = self._base_path(project, collection)
-        try:
-            v = self.metastore.get_config(project, f"TABLE_VERSION_{collection}")
-        except Exception:
-            v = None
-        return base if v is None else f"{base}.v{int(v)}"
-
-    # --- transaction-logged storage mode (opt-in per collection) --------
-
-    def txn_mode(self, project: str, collection: str) -> bool:
-        try:
-            return bool(self.metastore.get_config(project, f"TXN_{collection}"))
-        except Exception:
-            return False
+    def collections(self, project: str) -> list[str]:
+        """The project's event collections: its registered metastore
+        collections minus the ``_``-prefixed system tables (the
+        profile table ``_users`` has storage of its own)."""
+        return sorted(
+            c for c in self.metastore.collections(project) if not c.startswith("_")
+        )
 
     def txn_table(self, project: str, collection: str):
+        """The collection's :class:`txnlog.TxnTable` (its directory is
+        created on first use).  Raises for a collection whose data
+        still sits in a legacy directory that ``enable_txn`` never
+        migrated."""
+        legacy = self._legacy_dir(project, collection)
+        if legacy is not None:
+            raise RuntimeError(
+                f"{project}.{collection} is still a legacy plain-parquet "
+                f"directory ({legacy}); run enable_txn({project!r}, "
+                f"{collection!r}) once to migrate it"
+            )
+        return self._txn(project, collection)
+
+    def _txn(self, project: str, collection: str):
         from .txnlog import TxnTable
 
         return TxnTable(
@@ -579,6 +271,15 @@ class EventStore:
             bloom_cols=self.bloom_cols(project, collection),
         )
 
+    def stored_table(self, project: str, collection: str):
+        """:meth:`txn_table` for a collection that has been written,
+        else None — without creating a directory."""
+        if not os.path.isdir(
+            self._base_path(project, collection) + ".txn"
+        ) and self._legacy_dir(project, collection) is None:
+            return None
+        return self.txn_table(project, collection)  # raises for legacy
+
     def changes(
         self,
         project: str,
@@ -586,18 +287,10 @@ class EventStore:
         from_version: int,
         to_version: int | None = None,
     ) -> DataFrame:
-        """Change feed for a txn-logged collection — the store-level
-        surface of :meth:`TxnTable.changes` (Delta's
-        ``table_changes``): rows touched in ``(from_version,
-        to_version]`` tagged ``_change_type``/``_commit_version``.
-        Raises for collections not in transaction mode (legacy
-        directories have no commit history to diff)."""
-        if not self.txn_mode(project, collection):
-            raise ValueError(
-                f"{project}.{collection} is not transaction-logged; "
-                "enable_txn first — the change feed is derived from "
-                "commit history"
-            )
+        """Change feed of a collection — the store-level surface of
+        :meth:`TxnTable.changes` (Delta's ``table_changes``): rows
+        touched in ``(from_version, to_version]`` tagged
+        ``_change_type``/``_commit_version``."""
         return self.txn_table(project, collection).changes(
             from_version, to_version
         )
@@ -627,43 +320,58 @@ class EventStore:
             project, f"BLOOM_COLS_{collection}", [str(c) for c in cols]
         )
 
+    # --- legacy-directory migration ---------------------------------------
+
+    #: txn app id of the migration commit: once it has landed, no
+    #: other migration of the same collection can commit
+    MIGRATION_APP = "enable_txn"
+
     def enable_txn(
         self,
         project: str,
         collection: str,
         bloom_cols: list[str] | None = None,
     ) -> None:
-        """Switch a collection to the transaction-logged storage mode
-        (txnlog.TxnTable): appends/compaction/expiry become atomic
-        commits with optimistic concurrency, making the collection
-        safe for CONCURRENT writers across processes — the lakehouse
-        upgrade path VERDICT r6 "What's missing" #2 named (Delta/
-        Iceberg protocol, in-repo implementation).  Existing data is
-        migrated in one commit; the legacy directory is retired after
-        the migration commit lands (crash before the config flip
-        leaves the legacy table live and the txn dir orphaned —
-        re-running converges).  ``bloom_cols`` opts columns into
-        per-file bloom filters at the same time (persisted via
-        :meth:`set_bloom_cols` BEFORE the migration append, so the
-        migrated files already carry blooms)."""
-        if self.txn_mode(project, collection):
-            if bloom_cols is not None:
-                self.set_bloom_cols(project, collection, bloom_cols)
+        """Set ``bloom_cols`` (see :meth:`set_bloom_cols`) and migrate a
+        collection an older release wrote as a plain parquet
+        directory into its txn table.  The migration is one append
+        tagged with the :attr:`MIGRATION_APP` txn app id, so a re-run
+        after a crash commits nothing and only deletes the legacy
+        directory, and two migrators can never both commit (a
+        concurrent one on a shared lock fails fast with
+        :class:`MaintenanceLockHeld`).  The blooms are set BEFORE the
+        migration append, so migrated files already carry them.  A
+        collection with nothing to migrate takes no lock."""
+        if bloom_cols is not None:
+            self.set_bloom_cols(project, collection, bloom_cols)
+        if self._legacy_dir(project, collection) is None:
             return
         with self.maintenance_lock(project, collection):
-            if bloom_cols is not None:
-                # set BEFORE the migration append so the migration
-                # commit's files already carry blooms
-                self.set_bloom_cols(project, collection, bloom_cols)
-            legacy = self._table_path(project, collection)
-            txn = self.txn_table(project, collection)
-            if os.path.isdir(legacy) and any(
-                f.endswith(".parquet") for _, _, fs in os.walk(legacy) for f in fs
-            ):
+            legacy = self._legacy_dir(project, collection)
+            if legacy is None:
+                return  # a concurrent migrator finished first
+            if any(f.endswith(".parquet") for _, _, fs in os.walk(legacy) for f in fs):
                 df = self.spark.read.option("mergeSchema", "true").parquet(legacy)
-                txn.append(df, partition_col="_month" if "_month" in df.columns else None)
-            self.metastore.set_config(project, f"TXN_{collection}", True)
+                self._txn(project, collection).append(
+                    df,
+                    partition_col="_month" if "_month" in df.columns else None,
+                    app=self.MIGRATION_APP,
+                    app_version=0,
+                )
             shutil.rmtree(legacy, ignore_errors=True)
+
+    def _legacy_dir(self, project: str, collection: str) -> str | None:
+        """The plain parquet directory an older release kept for this
+        collection — ``{base}``, or ``{base}.v{N}`` once its
+        compaction had moved the ``TABLE_VERSION_*`` pointer — or None
+        when there is none."""
+        base = self._base_path(project, collection)
+        try:
+            v = self.metastore.get_config(project, f"TABLE_VERSION_{collection}")
+        except Exception:
+            v = None
+        path = base if v is None else f"{base}.v{int(v)}"
+        return path if os.path.isdir(path) else None
 
     def _txn_partition_col(self, txn) -> str | None:
         return (
@@ -671,25 +379,6 @@ class EventStore:
             if any((e.get("partition") or {}).get("_month") for e in txn.state().values())
             else None
         )
-
-    def _raw_read(self, project: str, collection: str) -> DataFrame | None:
-        """Raw physical frame (including the ``_month`` partition
-        column) regardless of storage mode, or None when the
-        collection holds no data — the ONE choke point every
-        maintenance/publish path reads through, so a txn collection
-        is never read from its directory listing (which may hold
-        retired files and crash orphans)."""
-        if self.txn_mode(project, collection):
-            txn = self.txn_table(project, collection)
-            if not txn.live_files():
-                return None
-            return txn.read()
-        path = self._table_path(project, collection)
-        if not os.path.isdir(path) or not any(
-            f.endswith(".parquet") for _, _, fs in os.walk(path) for f in fs
-        ):
-            return None
-        return self.spark.read.option("mergeSchema", "true").parquet(path)
 
     # --- write (reference K1/K2/K3) -------------------------------------
 
@@ -712,38 +401,24 @@ class EventStore:
     ) -> bool:
         """The write half of :meth:`append`, with no counting action:
         the ingest hot path meters rows via ``Observation`` on the
-        frame it passes in, so the batch executes exactly once
-        (count + write used to be two full lineage passes).
+        frame it passes in, so the batch executes exactly once.  The
+        batch lands as one atomic commit (stage → move → one log
+        entry), so concurrent appends from other processes interleave
+        safely.
 
-        ``txn_app``/``txn_version`` (txn collections only) make the
-        write IDEMPOTENT via the commit log's transaction identifiers:
-        a replayed streaming epoch whose first attempt already landed
-        this collection's append is a no-op — returns False and the
-        batch frame is never executed.  Plain-directory collections
-        ignore the tags (their replay guard is the uuid-dedup layer's
-        at-least-once contract).  Returns True when rows were
-        written."""
+        ``txn_app``/``txn_version`` make the write IDEMPOTENT via the
+        commit log's transaction identifiers: a replayed streaming
+        epoch whose first attempt already landed this collection's
+        append is a no-op — returns False and the batch frame is never
+        executed.  Returns True when the batch was committed."""
+        partition_col = None
         if "_time" in df.columns:
-            out = df.withColumn("_month", F.date_format(F.col("_time"), "yyyy-MM"))
-            partition_cols = ["_month"]
-        else:
-            out = df
-            partition_cols = []
-        if self.txn_mode(project, collection):
-            # atomic commit: stage → move → one log entry; concurrent
-            # appends from other processes interleave safely
-            v = self.txn_table(project, collection).append(
-                out,
-                partition_col=partition_cols[0] if partition_cols else None,
-                app=txn_app,
-                app_version=txn_version,
-            )
-            return v is not None
-        writer = out.write.mode("append")
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        writer.parquet(self._table_path(project, collection))
-        return True
+            df = df.withColumn("_month", F.date_format(F.col("_time"), "yyyy-MM"))
+            partition_col = "_month"
+        v = self.txn_table(project, collection).append(
+            df, partition_col=partition_col, app=txn_app, app_version=txn_version
+        )
+        return v is not None
 
     def append_dead_letter(self, project: str, df: DataFrame) -> int:
         n = df.count()
@@ -752,59 +427,30 @@ class EventStore:
         self.write_dead_letter(project, df)
         return n
 
-    def remove_if_fileless(self, project: str, collection: str) -> None:
-        """Remove a table dir that holds no parquet files (the
-        leftover of an observed zero-row write — only _SUCCESS
-        markers).  Keeps ``collections_with_data``'s dir-existence
-        contract honest: a collection that never stored a row leaves
-        no directory behind."""
-        if self.txn_mode(project, collection):
-            return  # the txn log dir IS the table's existence record
-        path = self._table_path(project, collection)
-        if os.path.isdir(path) and not any(
-            f.endswith(".parquet") for _, _, fs in os.walk(path) for f in fs
-        ):
-            import shutil
-
-            shutil.rmtree(path, ignore_errors=True)
-
     def write_dead_letter(self, project: str, df: DataFrame) -> None:
         """Uncounted dead-letter append (the caller already knows the
         row count from its ingest Observation)."""
-        df.write.mode("append").parquet(self._table_path(project, INVALID_COLLECTION))
+        df.write.mode("append").parquet(self._base_path(project, INVALID_COLLECTION))
 
     # --- maintenance ----------------------------------------------------
 
     def maintenance_lock(self, project: str, collection: str):
-        """Advisory single-writer lock for maintenance rewrites
-        (compact / erase_user / publish_*): the parquet-dir warehouse
-        has no transaction log, so two concurrent rewriters of the
-        SAME collection could interleave version pointers and orphan
-        a directory.  This is the documented single-writer
-        orchestration made ENFORCED: ``O_CREAT|O_EXCL`` on a lock
-        file (atomic on POSIX), holder pid recorded, stale locks from
-        dead processes broken automatically.  Ingest appends do NOT
-        take the lock — they only add files to the live directory,
-        which every rewriter re-reads under its own version bump.
-
-        (The reference retries concurrent DDL instead —
-        PostgresqlMetastore.java:256,343-346 — because Postgres gives
-        it real transactions; a lakehouse deployment of this engine
-        would use Delta/Iceberg commit protocols for the same
-        guarantee.)
+        """Single-writer lock for one collection's maintenance jobs
+        (compact / erase_user / publish_* / rebloom).  It guards the
+        writes outside the commit log — the ``.rollup`` cells and the
+        ``.bucketed`` copy; index directories take a lock of the same
+        kind beside them — and keeps one maintenance job per
+        collection; appends never take it.  See
+        :class:`_MaintenanceLock`.
 
         Usage: ``with store.maintenance_lock(project, collection): ...``
         """
-        return _MaintenanceLock(
-            self._base_path(project, collection) + ".lock",
-            scope=self.maintenance_lock_scope,
-        )
+        return _MaintenanceLock(self._base_path(project, collection) + ".lock")
 
     def compact(
         self,
         project: str,
         collection: str,
-        target_files_per_partition: int = 1,
         sort_by: str | None = None,
         zorder_by: list[str] | None = None,
     ) -> int:
@@ -812,71 +458,29 @@ class EventStore:
         micro-batches write one file per trigger per partition, so a
         long-running ingest accumulates thousands of tiny files —
         the classic streaming-warehouse pathology (SURVEY.md §7 hard
-        part (d)).  Rewrites each month partition into
-        ``target_files_per_partition`` files in a NEW versioned
-        directory, then swaps the metastore version pointer (one
-        atomic file replace).  Returns the number of data files
-        after compaction.
-
-        At warehouse scale this runs per-partition (only recent
-        months churn) and with Delta it would be OPTIMIZE +
-        ZORDER BY (_time); the parquet fallback keeps the same
-        layout contract.
-        """
+        part (d)).  Rewrites each month partition into one file and
+        retires the old files in the same commit.  ``sort_by`` /
+        ``zorder_by`` cluster rows within each rewritten partition so
+        manifest min/max ranges tighten and range reads skip files.
+        Returns the number of live data files after compaction."""
         with self.maintenance_lock(project, collection):
-            if self.txn_mode(project, collection):
-                # sort_by/zorder_by cluster rows within each rewritten
-                # partition so manifest min/max ranges tighten and
-                # range reads skip files (txn collections only — the
-                # plain-dir layout has no per-file stats to exploit)
-                txn = self.txn_table(project, collection)
-                txn.compact(
-                    partition_col=self._txn_partition_col(txn),
-                    sort_by=sort_by,
-                    zorder_by=zorder_by,
-                )
-                # reclaim orphans and files retired BEFORE this
-                # rewrite; the snapshot the rewrite just replaced is
-                # retained one version so a reader that resolved it
-                # moments ago can still lazily open its files.  The
-                # age guard protects a CONCURRENT append that has
-                # published staging files into the tree but not yet
-                # committed — appends don't take the maintenance
-                # lock, so without it those files would be reaped as
-                # orphans and the append would commit pointers to
-                # deleted files.
-                txn.vacuum(retain_versions=1, min_age_seconds=300)
-                return len(txn.live_files())
-            return self._compact_locked(project, collection, target_files_per_partition)
-
-    def _compact_locked(self, project: str, collection: str, target_files_per_partition: int) -> int:
-        path = self._table_path(project, collection)
-        # raw read: keep the physical layout (incl. the _month
-        # partition column, which read() projects away)
-        df = self.spark.read.option("mergeSchema", "true").parquet(path)
-        cur = self.metastore.get_config(project, f"TABLE_VERSION_{collection}")
-        nxt = 0 if cur is None else int(cur) + 1
-        out = f"{self._base_path(project, collection)}.v{nxt}"
-        if "_month" in df.columns:
-            (
-                df.repartition(target_files_per_partition, "_month")
-                .write.mode("overwrite")
-                .partitionBy("_month")
-                .parquet(out)
+            txn = self.txn_table(project, collection)
+            txn.compact(
+                partition_col=self._txn_partition_col(txn),
+                sort_by=sort_by,
+                zorder_by=zorder_by,
             )
-        else:
-            df.coalesce(target_files_per_partition).write.mode("overwrite").parquet(out)
-        # atomic pointer swap (metastore JSON os.replace); a crash
-        # before this line leaves the old version live, after it the
-        # new one — never a missing table
-        self.metastore.set_config(project, f"TABLE_VERSION_{collection}", nxt)
-        import shutil
-
-        shutil.rmtree(path, ignore_errors=True)
-        n_files = 0
-        for _, _, files in os.walk(out):
-            n_files += sum(1 for f in files if f.endswith(".parquet"))
-        return n_files
+            # reclaim orphans and files retired BEFORE this rewrite;
+            # the snapshot the rewrite just replaced is retained one
+            # version so a reader that resolved it moments ago can
+            # still lazily open its files.  The age guard protects a
+            # CONCURRENT append that has published staging files into
+            # the tree but not yet committed — appends don't take the
+            # maintenance lock, so without it those files would be
+            # reaped as orphans and the append would commit pointers
+            # to deleted files.
+            txn.vacuum(retain_versions=1, min_age_seconds=300)
+            return len(txn.live_files())
 
     def export_manifest(
         self,
@@ -887,40 +491,14 @@ class EventStore:
     ) -> dict:
         """Snapshot manifest for EXTERNAL engines (the reference's
         analytics model is other engines over shared storage,
-        README.md:27-31): a txn collection exports its live file list
-        at the current version — or at ``version`` (time travel: the
-        same snapshot the query service serves for that ``as_of``) —
-        via ``TxnTable.export_manifest``, snapshot-consistent under
-        concurrent rewrites within the vacuum retention horizon; a
-        plain collection exports its directory listing (consistent
-        only under the maintenance lock, which is why txn mode is
-        the interop-grade path; ``version`` raises there)."""
-        if self.txn_mode(project, collection):
-            return self.txn_table(project, collection).export_manifest(
-                version=version, out_path=out_path
-            )
-        if version is not None:
-            raise ValueError(
-                "versioned manifest export requires transaction-logged "
-                f"storage; {collection!r} is a plain collection"
-            )
-        path = self._table_path(project, collection)
-        files = sorted(
-            os.path.join(dp, f)
-            for dp, _dirs, fs in os.walk(path)
-            for f in fs
-            if f.endswith(".parquet")
+        README.md:27-31): the collection's live file list at the
+        current version — or at ``version`` (time travel: the same
+        snapshot the query service serves for that ``as_of``) — via
+        ``TxnTable.export_manifest``, snapshot-consistent under
+        concurrent rewrites within the vacuum retention horizon."""
+        return self.txn_table(project, collection).export_manifest(
+            version=version, out_path=out_path
         )
-        manifest = {"table": path, "version": None, "files": files, "entries": []}
-        if out_path:
-            import json as _json
-            import uuid as _uuid
-
-            tmp = out_path + f".tmp.{_uuid.uuid4().hex[:8]}"
-            with open(tmp, "w") as f:
-                _json.dump(manifest, f)
-            os.replace(tmp, out_path)
-        return manifest
 
     def table_stats(self, project: str, collection: str) -> DataFrame:
         """Per-month table statistics (rows, files, bytes, _time
@@ -928,40 +506,24 @@ class EventStore:
         collects per-collection stats to drive maintenance; SURVEY.md
         M5): feeds compaction scheduling (file counts), retention
         (oldest month), and capacity reports.  Row counts come from
-        one partition-grouped aggregate; file counts/bytes from a
-        directory walk (metadata only, no data read).  Txn
-        collections list files from the MANIFEST instead — retired
-        files and crash orphans in the directory never skew the
-        stats."""
+        one partition-grouped aggregate; file counts/bytes from the
+        manifest (metadata only — retired files and crash orphans in
+        the directory never skew them)."""
         files: dict[str, tuple[int, int]] = {}
-        if self.txn_mode(project, collection):
-            txn = self.txn_table(project, collection)
-            for e in txn.state().values():
+        txn = self.stored_table(project, collection)
+        if txn is not None:
+            version = txn.version()
+            for e in txn.state(version).values():
                 month = (e.get("partition") or {}).get("_month")
                 if month is None:
                     continue
                 n, size = files.get(month, (0, 0))
                 files[month] = (n + 1, size + os.path.getsize(txn._abs(e["path"])))
-        else:
-            path = self._table_path(project, collection)
-            if os.path.exists(path):
-                for d in os.listdir(path):
-                    if not d.startswith("_month="):
-                        continue
-                    month = d.split("=", 1)[1]
-                    n, size = 0, 0
-                    for dp, _, fs in os.walk(os.path.join(path, d)):
-                        for f in fs:
-                            if f.endswith(".parquet"):
-                                n += 1
-                                size += os.path.getsize(os.path.join(dp, f))
-                    files[month] = (n, size)
         if not files:
             return self.spark.createDataFrame(
                 [], "month string, n_rows long, n_files long, bytes long, min_time timestamp_ntz, max_time timestamp_ntz"
             )
-        raw = self._raw_read(project, collection)
-        rows = raw.groupBy(F.col("_month").alias("month")).agg(
+        rows = txn.read(version=version).groupBy(F.col("_month").alias("month")).agg(
             F.count(F.lit(1)).alias("n_rows"),
             F.min("_time").alias("min_time"),
             F.max("_time").alias("max_time"),
@@ -996,11 +558,9 @@ class EventStore:
         - ``rollup_refresh`` published rollups whose cells are behind
           the base: months MISSING from the rollup, plus months whose
           base content CHANGED after their cells were computed —
-          txn collections prove this from the commit log (the
-          recorded per-month snapshot version vs
-          ``TxnTable.months_changed_since``; metadata only, exact),
-          legacy collections from per-month file-set signatures
-          (errs toward refresh); an un-attributable change
+          proven from the commit log (the recorded per-month
+          snapshot version vs ``TxnTable.months_changed_since``;
+          metadata only, exact); an un-attributable change
           (merge/erase, a month gone from base) plans a FULL rebuild
           (``months=None``),
         - ``index_refresh`` / ``index_compact`` registered derived
@@ -1058,7 +618,7 @@ class EventStore:
                     }
                 )
             bcols = self.bloom_cols(project, coll)
-            if bcols and self.txn_mode(project, coll):
+            if bcols:
                 # bloom heal: live entries predating set_bloom_cols
                 # lack point-lookup blooms — a metadata-only commit
                 # backfills them (TxnTable.rebloom).  Planned after
@@ -1103,14 +663,14 @@ class EventStore:
                 # staleness BEYOND missing months: a month already in
                 # the rollup whose BASE content changed after its
                 # cells were computed (the common case — appends into
-                # the current month).  Txn mode compares the recorded
-                # per-month snapshot version against the commit log
-                # (metadata only, exact); legacy mode compares the
-                # recorded file-set signature (errs toward refresh).
+                # the current month): the recorded per-month snapshot
+                # version against the commit log (metadata only,
+                # exact).  A meta without versions (a rollup published
+                # before this bookkeeping) checks missing months only.
                 stale: list[str] = []
                 full = False
                 verified_to: int | None = None
-                if self.txn_mode(project, coll) and rmeta.get("month_versions"):
+                if rmeta.get("month_versions"):
                     mv = rmeta["month_versions"]
                     txn = self.txn_table(project, coll)
                     verified_to = txn.version()
@@ -1134,24 +694,6 @@ class EventStore:
                         and m in rolled
                         and cv > mv.get(m, -1)
                     )
-                elif not self.txn_mode(project, coll) and rmeta.get("month_sigs"):
-                    ms = rmeta["month_sigs"]
-                    sigs_now = self._month_sigs(project, coll)
-                    # months this plan's compact action will rewrite
-                    # get refreshed too: compaction changes the file
-                    # signature (content-preserving, but a legacy
-                    # table has no commit log to prove it), and the
-                    # refresh runs AFTER the compact so it records
-                    # the post-compact signature — keeping the next
-                    # plan empty instead of flagging a false change
-                    stale = sorted(
-                        m
-                        for m in base_months & rolled
-                        if ms.get(m) is None
-                        or sigs_now.get(m) != ms.get(m)
-                        or m in fat
-                    )
-                    full = bool(rolled - base_months - expired_planned)
                 if full:
                     plan.append(
                         {
@@ -1383,10 +925,7 @@ class EventStore:
                 # the index's own advisory writer lock: index
                 # maintenance serializes with concurrent appends the
                 # same way table maintenance serializes per collection
-                with _MaintenanceLock(
-                    imeta["path"].rstrip("/") + ".lock",
-                    scope=self.maintenance_lock_scope,
-                ):
+                with _MaintenanceLock(imeta["path"].rstrip("/") + ".lock"):
                     if item["action"] == "index_refresh":
                         base = self._read_index_base(imeta["base_path"])
                         n = im.refresh(
@@ -1414,50 +953,36 @@ class EventStore:
 
     def expire_months(self, project: str, collection: str, before_month: str) -> list[str]:
         """Retention/TTL enforcement: drop every month partition
-        strictly older than ``before_month`` ("YYYY-MM") — a pure
-        partition-directory delete, no data rewrite, O(months) not
+        strictly older than ``before_month`` ("YYYY-MM") — one
+        metadata-only commit per month, no data rewrite, O(months) not
         O(rows); the reason the table is month-partitioned in the
         first place.  Returns the dropped month keys.  Callers that
         maintain a rollup should follow with a full
         ``publish_rollup(months=None)`` (see its staleness note)."""
-        if self.txn_mode(project, collection):
-            txn = self.txn_table(project, collection)
-            months = sorted(
-                {
-                    (e.get("partition") or {}).get("_month")
-                    for e in txn.state().values()
-                }
-                - {None}
-            )
-            dropped = [m for m in months if m < before_month]
-            for m in dropped:
-                # metadata-only commit; files reclaimed on vacuum
-                txn.remove_partition("_month", m)
-            if dropped:
-                # same age guard as compact: a concurrent append's
-                # published-but-uncommitted files must not be reaped
-                txn.vacuum(retain_versions=1, min_age_seconds=300)
-            return dropped
-        path = self._table_path(project, collection)
-        if not os.path.exists(path):
+        txn = self.stored_table(project, collection)
+        if txn is None:
             return []
-        dropped = []
-        for d in sorted(os.listdir(path)):
-            if not d.startswith("_month="):
-                continue
-            month = d.split("=", 1)[1]
-            if month < before_month:
-                shutil.rmtree(os.path.join(path, d), ignore_errors=True)
-                dropped.append(month)
+        months = sorted(
+            {(e.get("partition") or {}).get("_month") for e in txn.state().values()}
+            - {None}
+        )
+        dropped = [m for m in months if m < before_month]
+        for m in dropped:
+            # metadata-only commit; files reclaimed on vacuum
+            txn.remove_partition("_month", m)
+        if dropped:
+            # same age guard as compact: a concurrent append's
+            # published-but-uncommitted files must not be reaped
+            txn.vacuum(retain_versions=1, min_age_seconds=300)
         return dropped
 
     def erase_user(
         self, project: str, user_col: str, user_id, collections: list[str] | None = None
     ) -> dict[str, int]:
         """Right-to-be-forgotten: rewrite every collection WITHOUT
-        the user's rows, via the same crash-safe versioned-directory
-        swap as ``compact`` (the old version stays live until the
-        pointer flips; a crash never leaves a missing table).
+        the user's rows in one commit per collection, like
+        ``compact`` (the old snapshot stays live until the commit
+        lands; a crash never leaves a missing table).
 
         DERIVED tables are refreshed too: the ``.bucketed`` analytics
         copy (full row-level copies of the user's data) is
@@ -1471,9 +996,7 @@ class EventStore:
         ``user_col`` are skipped.  At 100 TB the rewrite cost is the
         erasure-batch amortization problem every lakehouse has;
         bucketing by user would confine it to the user's buckets, and
-        a deletion-vector format (Delta/Iceberg) would make it
-        metadata-only — this parquet fallback keeps the same
-        month-partitioned layout contract."""
+        deletion vectors would make it metadata-only."""
         removed: dict[str, int] = {}
         for coll in collections or self.collections_with_data(project):
             with self.maintenance_lock(project, coll):
@@ -1483,53 +1006,29 @@ class EventStore:
         return removed
 
     def _erase_one(self, project: str, coll: str, user_col: str, user_id) -> int | None:
-        """One collection's erase rewrite (caller holds the
-        maintenance lock); None = skipped (missing table or no
+        """One collection's erase (caller holds the maintenance lock):
+        write the kept rows via staging, then ONE commit adds them and
+        retires exactly the snapshot they were read from — a
+        concurrent append conflicts neither way, its files are not in
+        the remove set and stay live.  None = skipped (no data or no
         user column)."""
-        df = self._raw_read(project, coll)
-        if df is None or user_col not in df.columns:
+        txn = self.stored_table(project, coll)
+        snapshot = txn.live_files() if txn is not None else []
+        if not snapshot:
+            return None
+        df = txn.read(files=snapshot)
+        if user_col not in df.columns:
             return None
         keep = df.where(
             F.col(user_col).isNull() | (F.col(user_col) != F.lit(user_id))
         )
         n_before = df.count()
-        if self.txn_mode(project, coll):
-            n_removed = self._txn_rewrite(project, coll, keep, n_before)
-            if n_removed:
-                self._refresh_derived(project, coll)
-            return n_removed
-        path = self._table_path(project, coll)
-        cur = self.metastore.get_config(project, f"TABLE_VERSION_{coll}")
-        nxt = 0 if cur is None else int(cur) + 1
-        out = f"{self._base_path(project, coll)}.v{nxt}"
-        writer = keep.write.mode("overwrite")
-        if "_month" in df.columns:
-            writer = writer.partitionBy("_month")
-        writer.parquet(out)
-        n_after = self.spark.read.parquet(out).count()
-        self.metastore.set_config(project, f"TABLE_VERSION_{coll}", nxt)
-        shutil.rmtree(path, ignore_errors=True)
-        n_removed = n_before - n_after
-        if n_removed:
-            self._refresh_derived(project, coll)
-        return n_removed
-
-    def _txn_rewrite(self, project: str, coll: str, keep: DataFrame, n_before: int) -> int:
-        """Erase-style rewrite of a txn collection: write the kept
-        rows via staging, then ONE commit adds them and retires the
-        whole snapshot (a concurrent append conflicts neither way —
-        its files are not in the remove set and stay live)."""
-        txn = self.txn_table(project, coll)
-        snapshot = txn.live_files()
         part_col = self._txn_partition_col(txn)
-        import uuid as _uuid
-
-        tag = _uuid.uuid4().hex[:12]
-        staging = os.path.join(txn.path, "_staging", tag)
+        tag = uuid.uuid4().hex[:12]
         writer = keep.write.mode("overwrite")
         if part_col:
             writer = writer.partitionBy(part_col)
-        writer.parquet(staging)
+        writer.parquet(os.path.join(txn.path, "_staging", tag))
         add = txn._publish_staging(tag)
         txn.commit(add=add, remove=snapshot, op="erase")
         # retain_versions=0 is DELIBERATE here (compact/expire retain
@@ -1542,8 +1041,10 @@ class EventStore:
         # concurrent append's published-but-uncommitted files must
         # survive this vacuum too.
         txn.vacuum(retain_versions=0, orphan_min_age_seconds=300)
-        n_after = sum(e["rows"] or 0 for e in add)
-        return n_before - n_after
+        n_removed = n_before - sum(e["rows"] or 0 for e in add)
+        if n_removed:
+            self._refresh_derived(project, coll)
+        return n_removed
 
     def _refresh_derived(self, project: str, collection: str) -> None:
         """Rebuild the derived ``.bucketed`` and ``.rollup`` tables of
@@ -1642,42 +1143,25 @@ class EventStore:
         delete with another writer's partition files).
 
         Freshness bookkeeping: ``_rollup_meta.json`` records, per
-        refreshed month, the txn snapshot version (txn mode — pinned
-        BEFORE the read, so concurrent unlocked appends can't be
-        silently included-but-unrecorded) or the base file-set
-        signature (legacy mode — snapshotted before the read, so a
-        racing append makes the record stale, never falsely fresh).
+        refreshed month, the txn snapshot version (pinned BEFORE the
+        read, so concurrent unlocked appends can't be silently
+        included-but-unrecorded).
         ``maintenance_plan`` compares these against the current base
         to flag months whose cells are behind — see its docstring.
         """
         measures = measures or DEFAULT_ROLLUP_MEASURES
         with self.maintenance_lock(project, collection):
-            as_of: int | None = None
-            base_sigs: dict[str, str] | None = None
-            if self.txn_mode(project, collection):
-                # pin the snapshot version BEFORE reading: appends
-                # don't take the maintenance lock, so read() at "now"
-                # could see rows newer than the version we record —
-                # masking their months from the staleness planner
-                txn = self.txn_table(project, collection)
-                as_of = txn.version()
-                raw = (
-                    txn.read(version=as_of)
-                    if txn.live_files(version=as_of)
-                    else None
-                )
-            else:
-                # legacy mode: snapshot the per-month file signatures
-                # FIRST for the same reason — a file landing between
-                # this listing and the aggregate's scan makes the
-                # recorded sig stale, which errs toward an extra
-                # refresh, never toward masked staleness
-                base_sigs = self._month_sigs(project, collection)
-                raw = self._raw_read(project, collection)
-            if raw is None:
+            # pin the snapshot version BEFORE reading: appends don't
+            # take the maintenance lock, so read() at "now" could see
+            # rows newer than the version we record — masking their
+            # months from the staleness planner
+            txn = self.stored_table(project, collection)
+            as_of = txn.version() if txn is not None else 0
+            if txn is None or not txn.live_files(version=as_of):
                 raise FileNotFoundError(
                     f"no data to roll up: {project}.{collection}"
                 )
+            raw = txn.read(version=as_of)
             if months is not None:
                 raw = raw.where(F.col("_month").isin(list(months)))
             day = F.col("_time").cast("date").alias("_day")
@@ -1721,10 +1205,8 @@ class EventStore:
                 .parquet(out)
             )
             # per-month freshness bookkeeping for maintenance_plan's
-            # staleness check: which snapshot each month's cells were
-            # computed at — the txn version (exact) or the legacy
-            # file-set signature (append/compact-sensitive, errs
-            # toward refresh).  Months this call did NOT touch keep
+            # staleness check: the txn version each month's cells were
+            # computed at.  Months this call did NOT touch keep
             # their previous record; an untouched month with no
             # record (pre-feature rollup) gets the stale sentinel so
             # the next maintenance cycle refreshes it once and
@@ -1735,19 +1217,10 @@ class EventStore:
                 if d.startswith("_month=")
             )
             refreshed = set(rolled) if months is None else set(months)
-            if as_of is not None:
-                prev = (existing or {}).get("month_versions") or {}
-                meta["month_versions"] = {
-                    m: (as_of if m in refreshed else prev.get(m, -1))
-                    for m in rolled
-                }
-            else:
-                prev = (existing or {}).get("month_sigs") or {}
-                base_sigs = base_sigs or {}
-                meta["month_sigs"] = {
-                    m: (base_sigs.get(m) if m in refreshed else prev.get(m))
-                    for m in rolled
-                }
+            prev = (existing or {}).get("month_versions") or {}
+            meta["month_versions"] = {
+                m: (as_of if m in refreshed else prev.get(m, -1)) for m in rolled
+            }
             self._write_rollup_meta(project, collection, meta)
             return int(obs.get["n"])
 
@@ -1755,31 +1228,6 @@ class EventStore:
         out = self._base_path(project, collection) + ".rollup"
         with open(os.path.join(out, "_rollup_meta.json"), "w") as f:
             json.dump(meta, f)
-
-    def _month_sigs(self, project: str, collection: str) -> dict[str, str]:
-        """Per-month file-set signature of a LEGACY collection's base
-        table: md5 over the sorted (name, size) parquet listing of
-        each ``_month=`` directory.  Pure directory metadata — no
-        file contents are read.  Appends and compactions both change
-        the signature; compaction's is a false positive the
-        maintenance cycle avoids by re-recording sigs after it
-        compacts (content is preserved by construction there)."""
-        path = self._table_path(project, collection)
-        sigs: dict[str, str] = {}
-        if not os.path.isdir(path):
-            return sigs
-        for d in sorted(os.listdir(path)):
-            if not d.startswith("_month="):
-                continue
-            entries = sorted(
-                (f, os.path.getsize(os.path.join(path, d, f)))
-                for f in os.listdir(os.path.join(path, d))
-                if f.endswith(".parquet")
-            )
-            sigs[d.split("=", 1)[1]] = hashlib.md5(
-                json.dumps(entries).encode()
-            ).hexdigest()
-        return sigs
 
     def rollup_meta(self, project: str, collection: str) -> dict | None:
         """The published rollup's dim/measure contract, or None if no
@@ -1845,20 +1293,11 @@ class EventStore:
                 ]
             )
             return RoutedReport(out, "rollup", "dims and measures derivable from cells")
-        path = self._table_path(project, collection)
-        if os.path.exists(path):
-            # raw read keeps the physical _month partition column, so
-            # a month-ranged report PRUNES partitions on the raw route
-            # too (read() would project it away)
-            raw = self.spark.read.option("mergeSchema", "true").parquet(path)
-            if months is not None:
-                raw = raw.where(F.col("_month").isin(list(months)))
-        else:
-            raw = self.read(project, collection).withColumn(
-                "_month", F.date_format(F.col("_time"), "yyyy-MM")
-            )
-            if months is not None:
-                raw = raw.where(F.col("_month").isin(list(months)))
+        raw = self.read(project, collection).withColumn(
+            "_month", F.date_format(F.col("_time"), "yyyy-MM")
+        )
+        if months is not None:
+            raw = raw.where(F.col("_month").isin(list(months)))
         raw = raw.withColumn("_day", F.col("_time").cast("date"))
         out = raw.groupBy(*grain_cols, *dims).agg(
             *[F.expr(sql).alias(name) for name, sql in measures.items()]
@@ -1878,53 +1317,38 @@ class EventStore:
     ) -> DataFrame:
         """Read a collection under its current (widest) registered
         schema; files written before an ADD COLUMN read NULL for the
-        new columns.  ``version`` time-travels a transaction-logged
-        collection to that commit-log snapshot (the same resolution
-        the query service's ``as_of`` and the versioned manifest
-        export use); it raises for plain collections, whose
-        directory layout keeps no history.
+        new columns.  ``version`` time-travels to that commit-log
+        snapshot (the same resolution the query service's ``as_of``
+        and the versioned manifest export use); ``timestamp`` to the
+        version current at that wall-clock instant.
 
-        ``equals`` (column → exact value) is the POINT-LOOKUP path
-        for transaction-logged collections: the manifest's per-file
-        blooms (see :meth:`set_bloom_cols`) and min/max stats prune
+        ``equals`` (column → exact value) is the POINT-LOOKUP path:
+        the manifest's per-file blooms (see :meth:`set_bloom_cols`)
+        and min/max stats prune
         the file list before Spark opens anything — the returned
         frame is a SUPERSET of matching rows (bloom false positives
         keep whole files), so callers still apply the row filter,
         exactly as with Iceberg/Delta data skipping."""
         schema = self.metastore.get_collection(project, collection)
-        if equals is not None and not self.txn_mode(project, collection):
-            raise ValueError(
-                "equals pruning requires transaction-logged storage; "
-                f"{collection!r} is a plain collection"
-            )
         if timestamp is not None:
             # TIMESTAMP AS OF: resolve to the commit-log version
             # current at that wall-clock instant (O(log commits))
             if version is not None:
                 raise ValueError("pass version OR timestamp, not both")
-            if not self.txn_mode(project, collection):
-                raise ValueError(
-                    "timestamp travel requires transaction-logged storage; "
-                    f"{collection!r} is a plain collection"
-                )
             version = self.txn_table(project, collection).version_at(timestamp)
-        if version is not None or equals is not None:
-            if version is not None and not self.txn_mode(project, collection):
-                raise ValueError(
-                    "versioned read requires transaction-logged storage; "
-                    f"{collection!r} is a plain collection"
-                )
-            txn = self.txn_table(project, collection)
-            # one log resolution feeds both the existence check and
-            # the read (out-of-range versions raise a descriptive
-            # ValueError inside live_files' state() call)
-            files = txn.live_files(version=version, equals=equals)
-            df = txn.read(files=files) if files else None
-        else:
-            df = self._raw_read(project, collection)
+        # a version is checked against the log even for a collection
+        # that was never written (out-of-range versions raise a
+        # descriptive ValueError inside live_files' state() call)
+        txn = (
+            self.txn_table(project, collection)
+            if version is not None or equals is not None
+            else self.stored_table(project, collection)
+        )
+        files = txn.live_files(version=version, equals=equals) if txn is not None else []
+        df = txn.read(files=files) if files else None
         if df is None:
-            # missing dir / only _SUCCESS markers / txn table with no
-            # live files: empty frame under the registered schema
+            # never written, or no live files: empty frame under the
+            # registered schema
             if schema is None:
                 raise FileNotFoundError(f"no such collection: {project}.{collection}")
             return self.spark.createDataFrame([], schema)
@@ -1941,7 +1365,7 @@ class EventStore:
         return df
 
     def read_dead_letter(self, project: str) -> DataFrame:
-        path = self._table_path(project, INVALID_COLLECTION)
+        path = self._base_path(project, INVALID_COLLECTION)
         if not os.path.exists(path):
             from .ingest.coerce import DEAD_LETTER_SCHEMA
 
@@ -1949,18 +1373,17 @@ class EventStore:
         return self.spark.read.parquet(path)
 
     def collections_with_data(self, project: str) -> list[str]:
-        import re
-
         base = os.path.join(self.warehouse, _safe(project))
         if not os.path.exists(base):
             return []
         names = {
-            re.sub(r"\.(v\d+|txn)$", "", d)  # versioned/txn dirs map to their table
+            # txn dirs (and unmigrated legacy dirs, so that using them
+            # raises) map to their collection
+            re.sub(r"\.(v\d+|txn)$", "", d)
             for d in os.listdir(base)
-            # derived maintenance artifacts are NOT collections (and
-            # must never be rewritten as if they were: a versioned
-            # plain-parquet rewrite would strip .bucketed's catalog
-            # bucketing metadata)
-            if not d.startswith("_") and not d.endswith((".bucketed", ".rollup"))
+            # derived maintenance artifacts and lock files are NOT
+            # collections (and must never be rewritten as if they were)
+            if not d.startswith("_")
+            and not d.endswith((".bucketed", ".rollup", ".lock"))
         }
         return sorted(names)

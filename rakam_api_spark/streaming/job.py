@@ -738,8 +738,8 @@ class StreamingIngest:
                 "measures": dict(spec.get("measures") or DEFAULT_ROLLUP_MEASURES),
             }
             # compare the CONTRACT keys only — the published meta also
-            # carries per-month freshness bookkeeping (month_versions/
-            # month_sigs) that a spec never states
+            # carries per-month freshness bookkeeping (month_versions)
+            # that a spec never states
             if {k: existing.get(k) for k in ("dims", "measures")} != effective:
                 raise ValueError(
                     f"rollup spec for {self.project}.{coll} differs from the "

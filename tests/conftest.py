@@ -28,9 +28,6 @@ _SLOW = {
     "test_index_maintenance.py::test_stale_bm25_index_surfaces_and_heals",
     "test_index_maintenance.py::test_stale_ivf_index_surfaces_heals_and_compacts",
     "test_index_maintenance.py::test_stale_minhash_index_surfaces_and_heals",
-    "test_lock_contention.py::test_acquisition_race_stress_under_cpu_load",
-    "test_lock_contention.py::test_crashed_debris_race_exactly_one_winner",
-    "test_lock_contention.py::test_stale_break_race_exactly_one_winner",
     "test_matview.py::test_cells_compaction",
     "test_matview.py::test_cells_grain_direct_sql_read",
     "test_matview.py::test_compact_pinned_snapshot_keeps_concurrent_append",
@@ -71,15 +68,9 @@ _SLOW = {
     "test_query_service.py::test_table_history_zero_not_aliased_to_unbounded",
     "test_query_service.py::test_time_travel_reads_the_requested_snapshot",
     "test_query_service.py::test_timestamp_pruning_refused_under_non_utc_session",
-    "test_rollup_staleness.py::test_legacy_compact_rides_refresh_and_plan_stays_idempotent",
-    "test_rollup_staleness.py::test_txn_append_into_rolled_month_flags_exactly_that_month",
-    "test_rollup_staleness.py::test_txn_verified_months_advance_to_scan_horizon",
     "test_search_index.py::TestSearchIndex::test_append_updates_results_and_stats",
     "test_search_index.py::TestTornAppendDetection::test_orphan_postings_detected_deep",
     "test_search_index.py::TestTornAppendDetection::test_repair_restores_scan_identical_scores",
-    "test_store.py::test_erase_user_refreshes_derived_tables",
-    "test_store.py::test_erase_user_rewrites_without_rows",
-    "test_store.py::test_maintenance_plan_and_run",
     "test_store_txn.py::test_enable_txn_migrates_and_routes_lifecycle",
     "test_store_txn.py::test_erase_user_on_txn_collection",
     "test_store_txn.py::test_store_export_manifest_external_read",

@@ -96,9 +96,6 @@ def test_store_level_change_feed(spark, warehouse):
     )
     store = collector.store
     collector.collect("proj", "ev", {"x": 1, "_time": "2024-01-05 09:00:00"})
-    with pytest.raises(ValueError):
-        store.changes("proj", "ev", 0)  # legacy mode: no commit history
-    store.enable_txn("proj", "ev")
     v0 = store.txn_table("proj", "ev").version()
     collector.collect("proj", "ev", {"x": 2, "_time": "2024-01-06 09:00:00"})
     feed = store.changes("proj", "ev", v0).collect()

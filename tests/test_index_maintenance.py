@@ -145,6 +145,7 @@ def test_stale_ivf_index_surfaces_heals_and_compacts(spark, warehouse, store, tm
 
 def test_index_refresh_respects_writer_lock(spark, warehouse, store, tmp_path):
     import subprocess
+    import sys
 
     from rakam_api_spark.llm.search_index import SearchIndex
 
@@ -157,20 +158,32 @@ def test_index_refresh_respects_writer_lock(spark, warehouse, store, tmp_path):
     plan = store.maintenance_plan("proj")
     assert plan and plan[0]["action"] == "index_refresh"
 
-    holder = subprocess.Popen(["sleep", "300"])
+    # a live foreign process holding the index lock file's flock
     lock_path = idx.rstrip("/") + ".lock"
-    with open(lock_path, "w") as f:
-        f.write(str(holder.pid))
+    holder = subprocess.Popen(
+        [
+            sys.executable,
+            "-c",
+            "import fcntl, sys, time\n"
+            "f = open(sys.argv[1], 'a')\n"
+            "fcntl.flock(f, fcntl.LOCK_EX)\n"
+            "print('held', flush=True)\n"
+            "time.sleep(300)\n",
+            lock_path,
+        ],
+        stdout=subprocess.PIPE,
+        text=True,
+    )
     try:
+        assert holder.stdout.readline().strip() == "held"
         with pytest.raises(MaintenanceLockHeld, match="single-writer"):
             store.run_maintenance("proj", plan)
     finally:
         holder.kill()
         holder.wait()
-    # dead holder -> stale lock breaks, refresh proceeds
+    # dead holder -> the kernel freed its lock, refresh proceeds
     done = store.run_maintenance("proj", store.maintenance_plan("proj"))
     assert done[0]["outcome"].startswith("2 ids appended")
-    assert not os.path.exists(lock_path)
 
 
 def test_index_over_txn_base_ignores_retired_files(spark, warehouse, store, tmp_path):

@@ -26,8 +26,6 @@ def _collector(spark, warehouse):
 
 def _txn_from_birth(store, project, *collections):
     store.metastore.create_project(project)
-    for c in collections:
-        store.metastore.set_config(project, f"TXN_{c}", True)
 
 
 def _envelopes(spark, events):

@@ -27,11 +27,16 @@ def env(spark, warehouse):
         spark, ms, pipeline=EnrichmentPipeline([TimestampMapper()])
     )
     store = collector.store
-    for i in range(8):
-        collector.collect(
-            "proj", "ev", {"uid": f"u{i}", "x": i, "_time": "2024-01-05 09:00:00"}
-        )
-    store.enable_txn("proj", "ev")
+    collector.batch(  # v1: one commit of eight rows
+        "proj",
+        [
+            {
+                "collection": "ev",
+                "properties": {"uid": f"u{i}", "x": i, "_time": "2024-01-05 09:00:00"},
+            }
+            for i in range(8)
+        ],
+    )
     return collector, store, MaterializedViewService(spark, store)
 
 
@@ -529,9 +534,13 @@ def test_multibase_full_refresh_applies_when_non_max_base_advances(spark, env):
     meta still records the new versions (stale data, then noops)."""
     collector, store, mv = env
     # second base with a much LOWER version than ev's
-    collector.collect("proj", "dim", {"uid": "u0", "grp": "a", "_time": "2024-01-05 09:00:00"})
-    collector.collect("proj", "dim", {"uid": "u1", "grp": "a", "_time": "2024-01-05 09:00:00"})
-    store.enable_txn("proj", "dim")
+    collector.batch(
+        "proj",
+        [
+            {"collection": "dim", "properties": {"uid": u, "grp": "a", "_time": "2024-01-05 09:00:00"}}
+            for u in ("u0", "u1")
+        ],
+    )
     mv.create(
         "proj",
         "joined",

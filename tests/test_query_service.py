@@ -183,10 +183,9 @@ def test_execute_export_formats(service):
 
 
 def test_query_service_reads_txn_collections(service):
-    """Ad-hoc SQL must see a txn-logged collection's snapshot: after
-    enable_txn the store's read path resolves live files from the
-    commit log, and the view the service registers is that snapshot."""
-    service.store.enable_txn("proj", "pageview")
+    """Ad-hoc SQL must see a collection's txn snapshot: the store's
+    read path resolves live files from the commit log, and the view
+    the service registers is that snapshot."""
     res = service.execute("proj", "SELECT COUNT(*) AS n FROM pageview")
     assert not res.failed, res.error
     assert res.result[0][0] == 30
@@ -362,11 +361,7 @@ def test_result_cache_hit_ttl_and_txn_invalidation(service):
     assert r2.properties.get("cached") is True
     assert r2.result == r1.result and r2.metadata == r1.metadata
 
-    # a committed write to a TXN collection invalidates exactly
-    service.store.enable_txn("proj", "pageview")
-    r3 = cached_svc.execute("proj", sql)  # repopulate under txn signature
-    assert "cached" not in r3.properties
-    assert cached_svc.execute("proj", sql).properties.get("cached") is True
+    # a committed write to the collection invalidates exactly
     from rakam_api_spark.api import EventCollector
     from rakam_api_spark.enrich import EnrichmentPipeline, TimestampMapper
 
@@ -406,7 +401,6 @@ def test_time_travel_reads_the_requested_snapshot(service):
     snapshot: rows appended after that version are invisible, the
     latest version matches the current read, and history() lists the
     versions a caller can travel to."""
-    service.store.enable_txn("proj", "pageview")
     v1 = service.store.txn_table("proj", "pageview").version()
     collector = EventCollector(
         service.spark,
@@ -433,13 +427,6 @@ def test_time_travel_reads_the_requested_snapshot(service):
 
 
 def test_time_travel_validation_and_rollup_isolation(service):
-    # plain collection: refused with a structured error, not an exception
-    res = service.execute(
-        "proj", "SELECT COUNT(*) FROM purchase", as_of={"purchase": 1}
-    )
-    assert res.failed and "transaction-logged" in res.error.message
-
-    service.store.enable_txn("proj", "pageview")
     v = service.store.txn_table("proj", "pageview").version()
     # out-of-range version: refused
     res = service.execute(
@@ -451,9 +438,6 @@ def test_time_travel_validation_and_rollup_isolation(service):
         "proj", "SELECT 1", as_of={"nope": 1}
     )
     assert res.failed and "unknown collection" in res.error.message
-    # history of a plain collection: refused
-    with pytest.raises(ValueError):
-        service.history("proj", "purchase")
 
     # a traveled collection's __rollup view is NOT registered (current
     # cells beside a historical base would mix versions)
@@ -469,7 +453,6 @@ def test_time_travel_validation_and_rollup_isolation(service):
 
 
 def test_time_travel_results_cached_per_version(service):
-    service.store.enable_txn("proj", "pageview")
     v = service.store.txn_table("proj", "pageview").version()
     svc = QueryService(
         service.spark, service.store, users=service.users, cache_ttl_seconds=60
@@ -525,7 +508,6 @@ def test_export_and_explain_at_version(service):
     """VERDICT r9 Missing #3: as_of is plumbed through execute_export
     and explain.  An export at a pinned version is byte-stable across
     a subsequent append; explain validates as_of like execute."""
-    service.store.enable_txn("proj", "pageview")
     v = service.store.txn_table("proj", "pageview").version()
     sql = "SELECT event_type, COUNT(*) AS n FROM pageview GROUP BY event_type ORDER BY event_type"
     before = service.execute_export("proj", sql, fmt="csv", as_of={"pageview": v})
@@ -547,14 +529,13 @@ def test_export_and_explain_at_version(service):
     assert live != before  # the un-pinned export sees the append
     with pytest.raises(ValueError, match="out of range"):
         service.execute_export("proj", sql, as_of={"pageview": v + 99})
-    with pytest.raises(ValueError, match="transaction-logged"):
-        service.explain("proj", sql, as_of={"purchase": 1})
+    with pytest.raises(ValueError, match="out of range"):
+        service.explain("proj", sql, as_of={"pageview": v + 99})
 
 
 def test_history_tail_is_bounded(service):
     """QueryService.history(since=, limit=) serves the recent tail
     with O(returned) commit-file opens (VERDICT r9 What's wrong #3)."""
-    service.store.enable_txn("proj", "pageview")
     txn = service.store.txn_table("proj", "pageview")
     for i in range(20):
         txn.commit(add=[{"path": f"x{i}.parquet", "rows": 0, "partition": None}])
@@ -575,7 +556,6 @@ def test_versioned_read_out_of_range_is_descriptive(service):
     """ADVICE r9: store.read(version=N) and export_manifest validate
     the version range up front — a descriptive ValueError, never a
     raw FileNotFoundError from a missing commit file."""
-    service.store.enable_txn("proj", "pageview")
     v = service.store.txn_table("proj", "pageview").version()
     with pytest.raises(ValueError, match="out of range"):
         service.store.read("proj", "pageview", version=v + 7)
@@ -594,12 +574,6 @@ def test_execute_as_of_timestamp(service):
     keys per resolved version, and misuse is a structured error."""
     import time as _time
 
-    # before any txn collection exists: structured refusal
-    pre = service.execute(
-        "proj", "SELECT COUNT(*) AS n FROM pageview", as_of_timestamp=_time.time()
-    )
-    assert pre.failed and "transaction-logged" in pre.error.message
-    service.store.enable_txn("proj", "pageview")
     _time.sleep(0.02)
     mid = _time.time()
     _time.sleep(0.02)
@@ -1263,11 +1237,16 @@ def _cdf_service(spark, warehouse):
         spark, ms, pipeline=EnrichmentPipeline([TimestampMapper()])
     )
     store = collector.store
-    for i in range(6):
-        collector.collect(
-            "proj", "ev", {"uid": f"u{i}", "x": i, "_time": "2024-01-05 09:00:00"}
-        )
-    store.enable_txn("proj", "ev")          # v1: migration commit
+    collector.batch(                        # v1: one commit of six rows
+        "proj",
+        [
+            {
+                "collection": "ev",
+                "properties": {"uid": f"u{i}", "x": i, "_time": "2024-01-05 09:00:00"},
+            }
+            for i in range(6)
+        ],
+    )
     for i in range(6, 9):
         collector.collect(                  # v2, v3, v4: one append each
             "proj", "ev", {"uid": f"u{i}", "x": i, "_time": "2024-02-05 09:00:00"}
@@ -1307,10 +1286,9 @@ def test_table_changes_tvf_validation(spark, warehouse):
     # start must be >= 1 (inclusive commit numbers)
     res = svc.execute("proj", "SELECT * FROM table_changes('ev', 0, 2)")
     assert res.error is not None
-    # non-txn collections have no commit history to diff
-    svcp = svc  # same project also has no such collection at all
-    res = svcp.execute("proj", "SELECT * FROM table_changes('nope', 1)")
-    assert res.error is not None
+    # an unknown collection has no commit history to diff
+    res = svc.execute("proj", "SELECT * FROM table_changes('nope', 1)")
+    assert res.error is not None and "unknown collection" in res.error.message
     # a literal mentioning the TVF is NOT rewritten
     res = svc.execute("proj", "SELECT 'table_changes(''ev'', 1)' AS s")
     assert res.error is None and res.result == [["table_changes('ev', 1)"]]
@@ -1395,9 +1373,9 @@ def test_table_history_tvf(spark, warehouse):
         "WHERE commit_ts > TIMESTAMP '2000-01-01 00:00:00'",
     )
     assert res3.error is None and res3.result == [[4]]
-    # non-txn collection -> structured error
+    # unknown collection -> structured error
     res4 = svc.execute("proj", "SELECT * FROM table_history('nope')")
-    assert res4.error is not None and "transaction-logged" in res4.error.message
+    assert res4.error is not None and "unknown collection" in res4.error.message
     # literal mention untouched
     res5 = svc.execute("proj", "SELECT 'table_history(''ev'')' AS s")
     assert res5.error is None and res5.result == [["table_history('ev')"]]

@@ -8,14 +8,11 @@ from the rollup — an append into an already-rolled month (the common
 case: the current month under continuous ingest) never triggered a
 refresh and the rollup served stale cells forever.  Now:
 
-- txn collections record the per-month snapshot VERSION at publish
-  and the planner scans the commit log (`months_changed_since`,
-  metadata only) — exact, and the scan stays bounded because
-  ``run_maintenance`` advances verified-unchanged months to the scan
-  horizon;
-- legacy collections record per-month file-set SIGNATURES — append
-  and compact both change them, so detection errs toward an extra
-  refresh, never toward masked staleness;
+- publish records the per-month snapshot VERSION and the planner
+  scans the commit log (`months_changed_since`, metadata only) —
+  exact, a compaction is never mistaken for a change, and the scan
+  stays bounded because ``run_maintenance`` advances
+  verified-unchanged months to the scan horizon;
 - un-attributable changes (merge/erase commits, a month gone from
   the base) plan a FULL rebuild (months=None).
 """
@@ -56,7 +53,6 @@ def test_txn_append_into_rolled_month_flags_exactly_that_month(spark, warehouse)
     _collect(collector, "2024-01-06")
     _collect(collector, "2024-02-01")
     store = collector.store
-    store.enable_txn("proj", "clicks")
     store.publish_rollup("proj", "clicks", dims=("event_type",))
 
     # fresh: nothing to do
@@ -76,6 +72,14 @@ def test_txn_append_into_rolled_month_flags_exactly_that_month(spark, warehouse)
     # healed: idempotent
     assert store.maintenance_plan("proj") == []
 
+    # a compaction rewrites the month's files but not its content: the
+    # plan compacts without a refresh, and stays empty afterwards
+    plan = store.maintenance_plan("proj", max_files_per_month=2)
+    assert [(p["action"], p["months"]) for p in plan] == [("compact", ["2024-01"])]
+    store.run_maintenance("proj", plan)
+    assert _rollup_counts(store) == {"2024-01": 3, "2024-02": 1}
+    assert store.maintenance_plan("proj", max_files_per_month=2) == []
+
 
 def test_txn_verified_months_advance_to_scan_horizon(spark, warehouse):
     """run_maintenance bumps UNCHANGED months' recorded versions to
@@ -85,7 +89,6 @@ def test_txn_verified_months_advance_to_scan_horizon(spark, warehouse):
     _collect(collector, "2024-01-05")
     _collect(collector, "2024-02-01")
     store = collector.store
-    store.enable_txn("proj", "clicks")
     store.publish_rollup("proj", "clicks", dims=("event_type",))
 
     for d in range(2, 8):  # six appends, all into 2024-02
@@ -107,7 +110,6 @@ def test_txn_merge_commit_forces_full_rebuild(spark, warehouse):
     _collect(collector, "2024-01-05")
     _collect(collector, "2024-02-01")
     store = collector.store
-    store.enable_txn("proj", "clicks")
     store.publish_rollup("proj", "clicks", dims=("event_type",))
     assert store.maintenance_plan("proj") == []
 
@@ -132,7 +134,6 @@ def test_txn_expire_outside_maintenance_forces_full_rebuild(spark, warehouse):
     _collect(collector, "2023-10-05")
     _collect(collector, "2024-01-05")
     store = collector.store
-    store.enable_txn("proj", "clicks")
     store.publish_rollup("proj", "clicks", dims=("event_type",))
     assert store.maintenance_plan("proj") == []
 
@@ -145,54 +146,14 @@ def test_txn_expire_outside_maintenance_forces_full_rebuild(spark, warehouse):
     assert store.maintenance_plan("proj") == []
 
 
-def test_legacy_append_into_rolled_month_flags_via_signature(spark, warehouse):
-    collector = _collector(spark, warehouse)
-    _collect(collector, "2024-01-05")
-    _collect(collector, "2024-02-01")
-    store = collector.store  # NO enable_txn: legacy directory mode
-    store.publish_rollup("proj", "clicks", dims=("event_type",))
-    assert store.maintenance_plan("proj") == []
-
-    _collect(collector, "2024-01-06")
-    plan = store.maintenance_plan("proj")
-    assert [(p["action"], p["months"]) for p in plan] == [
-        ("rollup_refresh", ["2024-01"])
-    ]
-    store.run_maintenance("proj", plan)
-    assert _rollup_counts(store) == {"2024-01": 2, "2024-02": 1}
-    assert store.maintenance_plan("proj") == []
-
-
-def test_legacy_compact_rides_refresh_and_plan_stays_idempotent(spark, warehouse):
-    """Compaction rewrites a month's file set; with no commit log to
-    prove content preservation, the planner refreshes the compacted
-    month in the SAME cycle (after the compact) so the recorded
-    signature matches the compacted layout and the next plan is
-    empty — never a false 'changed' loop."""
-    collector = _collector(spark, warehouse)
-    for d in range(1, 7):  # six files in one month partition
-        _collect(collector, f"2024-01-0{d}")
-    store = collector.store
-    store.publish_rollup("proj", "clicks", dims=("event_type",))
-
-    plan = store.maintenance_plan("proj", max_files_per_month=4)
-    got = {p["action"]: p["months"] for p in plan}
-    assert got["compact"] == ["2024-01"]
-    assert got["rollup_refresh"] == ["2024-01"]
-    store.run_maintenance("proj", plan)
-    assert _rollup_counts(store) == {"2024-01": 6}
-    assert store.maintenance_plan("proj", max_files_per_month=4) == []
-
-
 def test_pre_feature_meta_upgrades_on_first_cycle(spark, warehouse):
     """A rollup published before the bookkeeping existed (meta lacks
-    month_versions/month_sigs) is never flagged by the staleness
+    month_versions) is never flagged by the staleness
     check — the next publish records the bookkeeping and the cycle
     converges."""
     collector = _collector(spark, warehouse)
     _collect(collector, "2024-01-05")
     store = collector.store
-    store.enable_txn("proj", "clicks")
     store.publish_rollup("proj", "clicks", dims=("event_type",))
     meta = store.rollup_meta("proj", "clicks")
     del meta["month_versions"]  # simulate a pre-feature publish

@@ -8,11 +8,8 @@ from rakam_api_spark.catalog import Metastore
 from rakam_api_spark.enrich import EnrichmentPipeline, TimestampMapper
 
 
-def _n_parquet_files(path):
-    n = 0
-    for _, _, files in os.walk(path):
-        n += sum(1 for f in files if f.endswith(".parquet"))
-    return n
+def _live_months(txn):
+    return {(e.get("partition") or {}).get("_month") for e in txn.state().values()}
 
 
 def test_compact_collapses_files_preserves_rows(spark, warehouse):
@@ -27,29 +24,24 @@ def test_compact_collapses_files_preserves_rows(spark, warehouse):
             {"x": i, "_time": f"{month}-0{i % 5 + 1} 10:00:00"},
         )
     store = collector.store
-    path = store._table_path("proj", "clicks")
-    before_files = _n_parquet_files(path)
+    txn = store.txn_table("proj", "clicks")
     before = sorted(r["x"] for r in store.read("proj", "clicks").collect())
-    assert before_files >= 6
+    assert len(txn.live_files()) >= 6
 
     n_files = store.compact("proj", "clicks")
     assert n_files == 2  # one file per month partition
     after = sorted(r["x"] for r in store.read("proj", "clicks").collect())
     assert after == before
-    # pointer swap: a NEW versioned dir is live, the old dir is gone,
-    # and the metastore pointer names the new version (crash-safe:
-    # the table path is never missing at rest)
-    new_path = store._table_path("proj", "clicks")
-    assert new_path != path and new_path.endswith(".v0")
-    assert not os.path.exists(path)
-    assert ms.get_config("proj", "TABLE_VERSION_clicks") == 0
+    # one commit retired the small files and added the compacted ones
+    assert txn.history()[-1]["op"] == "compact"
     # month partition layout intact (pruning still works)
-    months = {d for d in os.listdir(new_path) if d.startswith("_month=")}
-    assert months == {"_month=2024-01", "_month=2024-02"}
-    # second compaction bumps the version and stays readable
+    assert _live_months(txn) == {"2024-01", "2024-02"}
+    # a second compaction commits again and stays readable
+    v = txn.version()
     store.compact("proj", "clicks")
-    assert store._table_path("proj", "clicks").endswith(".v1")
+    assert txn.version() == v + 1
     assert sorted(r["x"] for r in store.read("proj", "clicks").collect()) == before
+    # the lock file left beside the table is not a collection
     assert store.collections_with_data("proj") == ["clicks"]
 
 
@@ -131,10 +123,8 @@ def test_rollup_publish_and_incremental_refresh(spark, warehouse):
     assert jan_files_after == jan_files_before
 
     # full rebuild drops rollup partitions for months that vanished
-    # from raw (retention delete): remove january raw, rebuild all
-    import shutil
-
-    shutil.rmtree(os.path.join(warehouse, "p", "ev", "_month=2024-01"))
+    # from raw (retention delete): expire january raw, rebuild all
+    assert store.expire_months("p", "ev", "2024-02") == ["2024-01"]
     store.publish_rollup("p", "ev")
     months_left = {r["_month"] for r in store.read_rollup("p", "ev").select("_month").distinct().collect()}
     assert months_left == {"2024-02"}
@@ -170,11 +160,10 @@ def test_erase_user_rewrites_without_rows(spark, warehouse):
     rest = store.read("proj", "clicks")
     assert rest.where("uid = 1").count() == 0
     assert rest.count() == 4
-    # versioned swap left a live table dir and the month layout intact
-    path = store._table_path("proj", "clicks")
-    assert ".v" in path
-    months = {d for d in os.listdir(path) if d.startswith("_month=")}
-    assert months == {"_month=2024-01", "_month=2024-02"}
+    # one erase commit, month layout intact
+    txn = store.txn_table("proj", "clicks")
+    assert txn.history()[-1]["op"] == "erase"
+    assert _live_months(txn) == {"2024-01", "2024-02"}
 
 
 def test_erase_user_refreshes_derived_tables(spark, warehouse):
@@ -231,10 +220,9 @@ def test_maintenance_plan_and_run(spark, warehouse):
     got = {(p["collection"], p["action"]): p["months"] for p in plan}
     assert got[("clicks", "expire")] == ["2023-10"]
     assert "2024-01" in got[("clicks", "compact")]
-    # 2024-02 is missing from the rollup; 2024-01 rides along because
-    # this plan's compaction will rewrite its file set (the refresh
-    # runs after the compact and records the post-compact signature)
-    assert got[("clicks", "rollup_refresh")] == ["2024-01", "2024-02"]
+    # 2024-02 is missing from the rollup; the compaction of 2024-01
+    # preserves content, so the commit log does not flag it
+    assert got[("clicks", "rollup_refresh")] == ["2024-02"]
 
     done = store.run_maintenance("proj", plan)
     assert all("outcome" in p for p in done)
@@ -249,10 +237,11 @@ def test_maintenance_plan_and_run(spark, warehouse):
 
 def test_maintenance_lock_single_writer(spark, warehouse):
     """Maintenance rewrites are single-writer per collection: a live
-    holder blocks a second writer, a stale lock (dead pid) is broken,
-    and the lock is re-entrant so erase_user can republish derived
-    tables under its own lock."""
+    foreign holder of the lock file's flock blocks a second writer,
+    its death frees the lock, and the lock is re-entrant so
+    erase_user can republish derived tables under its own lock."""
     import subprocess
+    import sys
 
     import pytest
 
@@ -263,26 +252,59 @@ def test_maintenance_lock_single_writer(spark, warehouse):
     collector.collect("proj", "ev", {"x": 1, "_time": "2024-01-05 09:00:00"})
     store = collector.store
 
-    # a LIVE foreign holder blocks compaction
-    holder = subprocess.Popen(["sleep", "30"])
+    # a LIVE foreign process holding the lock file's flock blocks compaction
     lock_path = store._base_path("proj", "ev") + ".lock"
-    with open(lock_path, "w") as f:
-        f.write(str(holder.pid))
+    holder = subprocess.Popen(
+        [
+            sys.executable,
+            "-c",
+            "import fcntl, sys, time\n"
+            "f = open(sys.argv[1], 'a')\n"
+            "fcntl.flock(f, fcntl.LOCK_EX)\n"
+            "print('held', flush=True)\n"
+            "time.sleep(60)\n",
+            lock_path,
+        ],
+        stdout=subprocess.PIPE,
+        text=True,
+    )
     try:
+        assert holder.stdout.readline().strip() == "held"
         with pytest.raises(MaintenanceLockHeld, match="single-writer"):
             store.compact("proj", "ev")
     finally:
         holder.kill()
         holder.wait()
-    # the holder is now DEAD: the stale lock breaks and compact runs
+    # the holder is now DEAD: the kernel freed its lock and compact runs
     assert store.compact("proj", "ev") == 1
-    assert not os.path.exists(lock_path)  # released after the rewrite
-    # re-entrancy: nested lock acquisition in one process is fine
+
+    def foreign_probe():
+        return subprocess.run(
+            [
+                sys.executable,
+                "-c",
+                "import fcntl, sys\n"
+                "f = open(sys.argv[1], 'a')\n"
+                "try:\n"
+                "    fcntl.flock(f, fcntl.LOCK_EX | fcntl.LOCK_NB)\n"
+                "    print('free')\n"
+                "except BlockingIOError:\n"
+                "    print('busy')\n",
+                lock_path,
+            ],
+            capture_output=True,
+            text=True,
+            check=True,
+        ).stdout.strip()
+
+    # re-entrancy: nested lock acquisition in one thread is fine
     with store.maintenance_lock("proj", "ev"):
         with store.maintenance_lock("proj", "ev"):
-            assert os.path.exists(lock_path)
-        assert os.path.exists(lock_path)  # inner exit keeps it held
-    assert not os.path.exists(lock_path)
+            assert foreign_probe() == "busy"
+        assert foreign_probe() == "busy"  # inner exit keeps it held
+    assert foreign_probe() == "free"
+    # the lock file is never unlinked: every process locks one inode
+    assert os.path.exists(lock_path)
 
 
 def test_table_stats_per_month(spark, warehouse):

@@ -1,13 +1,17 @@
-"""EventStore's transaction-logged storage mode: legacy collections
-migrate in one commit, then every store lifecycle op (append, read,
-stats, maintenance compaction, TTL expiry, erase) routes through
-atomic TxnTable commits — the multi-writer-safe warehouse mode."""
+"""EventStore over the transaction log: every store lifecycle op
+(append, read, stats, maintenance compaction, TTL expiry, erase)
+routes through atomic TxnTable commits, and a plain parquet directory
+left by an older release migrates in one idempotent commit."""
 
 import os
+
+import pytest
+from pyspark.sql import functions as F
 
 from rakam_api_spark.api import EventCollector
 from rakam_api_spark.catalog import Metastore
 from rakam_api_spark.enrich import EnrichmentPipeline, TimestampMapper
+from rakam_api_spark.store import EventStore
 
 
 def _collector(spark, warehouse):
@@ -24,10 +28,12 @@ def test_enable_txn_migrates_and_routes_lifecycle(spark, warehouse):
         )
     store = collector.store
     before = sorted(r["x"] for r in store.read("proj", "clicks").collect())
+    v = store.txn_table("proj", "clicks").version()
+    assert v == 4  # one commit per collect
 
+    # nothing to migrate: enable_txn commits nothing
     store.enable_txn("proj", "clicks")
-    assert store.txn_mode("proj", "clicks")
-    # migration preserved the data; the legacy directory is gone
+    assert store.txn_table("proj", "clicks").version() == v
     assert sorted(r["x"] for r in store.read("proj", "clicks").collect()) == before
     assert not os.path.exists(store._base_path("proj", "clicks"))
     assert store.collections_with_data("proj") == ["clicks"]
@@ -71,7 +77,6 @@ def test_erase_user_on_txn_collection(spark, warehouse):
             {"_user": f"u{i % 2}", "x": i, "_time": f"2024-01-0{i + 1} 09:00:00"},
         )
     store = collector.store
-    store.enable_txn("proj", "ev")
     removed = store.erase_user("proj", "_user", "u1")
     assert removed == {"ev": 3}
     rows = store.read("proj", "ev").collect()
@@ -118,7 +123,6 @@ def test_streaming_ingest_into_txn_collection(spark, warehouse, tmp_path):
     collector = _collector(spark, warehouse)
     store = collector.store
     store.metastore.create_project("proj")
-    store.metastore.set_config("proj", "TXN_clicks", True)  # txn from birth
     ing = StreamingIngest(
         collector,
         "proj",
@@ -162,7 +166,6 @@ def test_store_export_manifest_external_read(spark, warehouse):
             "proj", "taps", {"x": i, "_time": f"2024-03-0{i + 1} 09:00:00"}
         )
     store = collector.store
-    store.enable_txn("proj", "taps")
     out = os.path.join(warehouse, "taps_snapshot.json")
     m = store.export_manifest("proj", "taps", out_path=out)
     assert m["version"] is not None and m["files"]
@@ -181,26 +184,17 @@ def test_store_export_manifest_external_read(spark, warehouse):
     assert xs == [0, 1, 2]  # the exported snapshot, not the live table
 
     # versioned export (time travel): the manifest at the pre-append
-    # version still lists exactly the first snapshot, and a plain
-    # collection refuses a versioned export
+    # version still lists exactly the first snapshot
     m_old = store.export_manifest("proj", "taps", version=m["version"])
     assert m_old["files"] == m["files"]
     m_new = store.export_manifest("proj", "taps")
     assert m_new["version"] == m["version"] + 1
     assert len(m_new["files"]) == len(m["files"]) + 1
-    collector.collect("proj", "plain", {"x": 0, "_time": "2024-03-01 09:00:00"})
-    import pytest as _pytest
 
-    with _pytest.raises(ValueError, match="transaction-logged"):
-        store.export_manifest("proj", "plain", version=1)
-
-    # store.read(version=) resolves the same snapshot the manifest
-    # lists — and refuses plain collections
+    # store.read(version=) resolves the same snapshot the manifest lists
     old_xs = sorted(r["x"] for r in store.read("proj", "taps", version=m["version"]).collect())
     assert old_xs == [0, 1, 2]
     assert sorted(r["x"] for r in store.read("proj", "taps").collect()) == [0, 1, 2, 99]
-    with _pytest.raises(ValueError, match="transaction-logged"):
-        store.read("proj", "plain", version=1)
 
 
 def test_txn_collection_epoch_replay_never_double_appends(spark, warehouse, tmp_path):
@@ -217,7 +211,6 @@ def test_txn_collection_epoch_replay_never_double_appends(spark, warehouse, tmp_
 
     collector = _collector(spark, warehouse)
     collector.collect("proj", "c", {"v": -1, "_time": "2024-01-01 09:00:00"})
-    collector.store.enable_txn("proj", "c")
 
     ing = StreamingIngest(collector, "proj", dedup_uuids=False)
     ing._commit_ns = "testns"
@@ -254,3 +247,69 @@ def test_txn_collection_epoch_replay_never_double_appends(spark, warehouse, tmp_
     ing.process_batch(batch(0, 6), epoch_id=7)
     assert store.read("proj", "c").count() == 10
     assert txn.app_versions()["stream:testns:c"] == 8
+
+
+def _plant_legacy(spark, store, project, collection, xs, version=None):
+    """Write ``xs`` the way an older release did: a plain parquet
+    directory partitioned by ``_month``, at ``{base}`` or, after a
+    compaction, at ``{base}.v{N}`` named by the TABLE_VERSION pointer."""
+    store.metastore.create_project(project)
+    path = store._base_path(project, collection)
+    if version is not None:
+        store.metastore.set_config(project, f"TABLE_VERSION_{collection}", version)
+        path = f"{path}.v{version}"
+    (
+        spark.createDataFrame([(x,) for x in xs], "x long")
+        .withColumn("_time", F.lit("2024-01-05 09:00:00").cast("timestamp"))
+        .withColumn("_month", F.lit("2024-01"))
+        .write.mode("append")
+        .partitionBy("_month")
+        .parquet(path)
+    )
+    return path
+
+
+def test_enable_txn_migrates_legacy_dir_once(spark, warehouse):
+    store = EventStore(spark, Metastore(warehouse))
+    legacy = _plant_legacy(spark, store, "proj", "clicks", [1, 2, 3], version=1)
+    store.enable_txn("proj", "clicks")
+    assert not os.path.exists(legacy)
+    store.enable_txn("proj", "clicks")  # nothing left to migrate
+    # a crash after the migration commit but before the legacy
+    # directory was deleted: the re-run commits nothing, deletes it
+    _plant_legacy(spark, store, "proj", "clicks", [1, 2, 3], version=1)
+    store.enable_txn("proj", "clicks")
+    assert not os.path.exists(legacy)
+
+    assert sorted(r["x"] for r in store.read("proj", "clicks").collect()) == [1, 2, 3]
+    txn = store.txn_table("proj", "clicks")
+    assert [h["op"] for h in txn.history()] == ["append"]
+    assert txn.app_versions() == {EventStore.MIGRATION_APP: 0}
+    assert store.table_stats("proj", "clicks").collect()[0]["month"] == "2024-01"
+
+
+def test_unmigrated_legacy_dir_raises(spark, warehouse):
+    store = EventStore(spark, Metastore(warehouse))
+    _plant_legacy(spark, store, "proj", "clicks", [1])
+    with pytest.raises(RuntimeError, match="enable_txn"):
+        store.read("proj", "clicks")
+    with pytest.raises(RuntimeError, match="enable_txn"):
+        store.write_batch("proj", "clicks", spark.createDataFrame([(2,)], "x long"))
+    store.enable_txn("proj", "clicks")
+    assert [r["x"] for r in store.read("proj", "clicks").collect()] == [1]
+
+
+def test_enable_txn_on_fresh_project_takes_no_lock(spark, warehouse, tmp_path):
+    """A fresh project has no directory yet: enable_txn with nothing
+    to migrate must neither crash nor take the lock, and the lock
+    itself creates its parent directory."""
+    from rakam_api_spark.store import _MaintenanceLock
+
+    ms = Metastore(warehouse)
+    ms.create_project("bench")
+    store = EventStore(spark, ms)
+    store.enable_txn("bench", "pageviews", bloom_cols=["uid"])
+    assert store.bloom_cols("bench", "pageviews") == ["uid"]
+    assert not os.path.exists(os.path.join(warehouse, "bench"))
+    with _MaintenanceLock(str(tmp_path / "a" / "b" / "c.lock")):
+        assert os.path.exists(tmp_path / "a" / "b" / "c.lock")

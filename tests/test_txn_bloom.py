@@ -129,9 +129,8 @@ def test_store_point_lookup_via_equals(spark, warehouse):
     metastore so every writer blooms consistently, and
     store.read(equals=) prunes from the manifest.  The returned frame
     is a SUPERSET (bloom fpr keeps whole files); the row filter on
-    top yields exactly the right rows.  Plain collections refuse the
-    parameter; absent values yield an empty frame under the
-    registered schema."""
+    top yields exactly the right rows; absent values yield an empty
+    frame under the registered schema."""
     from rakam_api_spark.api import EventCollector
     from rakam_api_spark.catalog import Metastore
     from rakam_api_spark.enrich import EnrichmentPipeline, TimestampMapper
@@ -141,20 +140,18 @@ def test_store_point_lookup_via_equals(spark, warehouse):
         spark, ms, pipeline=EnrichmentPipeline([TimestampMapper()])
     )
     store = collector.store
+    ms.create_project("proj")
+    store.enable_txn("proj", "ev", bloom_cols=["uid"])
+    assert store.bloom_cols("proj", "ev") == ["uid"]
     for i in range(40):
         collector.collect(
             "proj",
             "ev",
             {"uid": f"user-{i}", "x": i, "_time": f"2024-0{i % 3 + 1}-05 09:00:00"},
         )
-    with pytest.raises(ValueError, match="transaction-logged"):
-        store.read("proj", "ev", equals={"uid": "u1"})
-    store.enable_txn("proj", "ev", bloom_cols=["uid"])
-    assert store.bloom_cols("proj", "ev") == ["uid"]
-    # the migration commit itself carries blooms
+    # every append carries blooms (the collector writes through the store)
     ents = store.txn_table("proj", "ev").state().values()
-    assert any("blooms" in e for e in ents)
-    # appends after the flip bloom too (collector routes through txn)
+    assert all("blooms" in e for e in ents)
     collector.collect(
         "proj", "ev", {"uid": "user-99", "x": 99, "_time": "2024-05-01 09:00:00"}
     )
@@ -216,8 +213,7 @@ def test_maintenance_plans_and_runs_rebloom(spark, warehouse):
         collector.collect(
             "proj", "ev", {"uid": f"user-{i}", "_time": "2024-01-05 09:00:00"}
         )
-    store.enable_txn("proj", "ev")  # no blooms yet: migration is bloomless
-    store.set_bloom_cols("proj", "ev", ["uid"])
+    store.set_bloom_cols("proj", "ev", ["uid"])  # history has no blooms
     plan = store.maintenance_plan("proj")
     actions = [p for p in plan if p["action"] == "rebloom"]
     assert actions and "uid" in actions[0]["reason"]

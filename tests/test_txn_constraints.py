@@ -94,9 +94,6 @@ def test_store_timestamp_travel(spark, warehouse):
     )
     collector.collect("proj", "ev", {"x": 1, "_time": "2024-01-05 09:00:00"})
     store = collector.store
-    with pytest.raises(ValueError, match="transaction-logged"):
-        store.read("proj", "ev", timestamp=time.time())
-    store.enable_txn("proj", "ev")
     time.sleep(0.02)
     mid = time.time()
     time.sleep(0.02)
